@@ -86,7 +86,7 @@ object Bench {
     val runsByKey =
       scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Int, Int)]
     // SILENT-REBUILD instrument (round-11, VERDICT r10 #2): the Memo
-    // ledger only counts Memo.getOrElseUpdate builds — an EVICTED
+    // ledger only counts artifact builds — an EVICTED
     // cached/checkpointed frame re-executes invisibly (r10 driver:
     // r17/r19/r20 at 11–21× with builds=0 on both runs, plus a
     // TorrentBroadcast store-fail in the tail). A SparkListener counts,

@@ -3,18 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Writes PLANS.md: formatted physical plans of EVERY registered query,
-  * the artifact for auditing scan pruning / pushdown / join strategy /
-  * shuffle placement at a glance. Keys whose construction executes
-  * eagerly (streaming harnesses, checkpoint-pinned iterative ops)
-  * show the plan of their materialized RESULT — the upstream plan for
-  * those is audited via their OpsSpec plan pins instead. Run:
+/** Formatted physical plans, two forms:
+  *  - `PlanDump [sfDir]` writes PLANS.md with EVERY registered query's
+  *    plan, the artifact for auditing scan pruning / pushdown / join
+  *    strategy / shuffle placement at a glance;
+  *  - `PlanDump <sfDir> <outDir> <tag> key…` writes
+  *    `<outDir>/<fullKey>_<tag>.txt` per key — the per-round
+  *    before/after plan evidence. A key may be a prefix matching
+  *    exactly one query (see [[SparkEntry.resolveKey]]).
+  * Keys whose construction executes eagerly (streaming harnesses,
+  * checkpoint-pinned iterative ops) show the plan of their
+  * materialized RESULT — the upstream plan for those is audited via
+  * their OpsSpec plan pins instead. Run:
   * `sbt "runMain graft.PlanDump /root/testdata/sf0.01"` */
 object PlanDump {
-  private def picks = SparkEntry.queries.keys.toSeq.sorted
-
   def main(args: Array[String]): Unit = {
+    require(args.length <= 1 || args.length >= 4,
+      "usage: PlanDump [sfDir] | PlanDump <sfDir> <outDir> <tag> key...")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    val keys = args.drop(3).toSeq.map(SparkEntry.resolveKey)
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -22,14 +29,25 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val plans = picks.map { name =>
-      name -> (try {
-        SparkEntry.queries(name)(spark, d).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      } catch {
-        case e: Throwable => s"(plan dump failed: ${e.getMessage})\n"
-      })
+    if (keys.isEmpty) writePlansMd(spark, d)
+    else {
+      val (out, tag) = (args(1), args(2))
+      Files.createDirectories(Paths.get(out))
+      keys.foreach { k =>
+        Files.writeString(Paths.get(out, s"${k}_$tag.txt"), plan(spark, d, k))
+        println(s"[plandump] wrote $k -> $tag")
+      }
     }
+    spark.stop()
+  }
+
+  private def plan(spark: SparkSession, d: String, name: String): String =
+    try SparkEntry.queries(name)(spark, d).queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    catch { case e: Throwable => s"(plan dump failed: ${e.getMessage})\n" }
+
+  private def writePlansMd(spark: SparkSession, d: String): Unit = {
+    val plans = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> plan(spark, d, n))
     // audit facts COMPUTED from this dump, never asserted from memory —
     // a hardcoded "exactly 3 cartesians" claim would keep printing
     // after a regression added a fourth
@@ -62,7 +80,6 @@ object PlanDump {
       sb ++= "```\n"
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${picks.size} plans)")
-    spark.stop()
+    println(s"wrote PLANS.md (${plans.size} plans)")
   }
 }

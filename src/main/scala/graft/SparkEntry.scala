@@ -32,4 +32,16 @@ object SparkEntry {
     * the same parquet tables. Omitted keys → weaker rows-only check. */
   def oracleSql: Map[String, String] =
     registries.iterator.flatMap(_._2).toMap
+
+  /** The full query key for `k`: `k` itself when registered, else the
+    * one key it prefixes. An ambiguous prefix ("e2" hits e20/e21/...)
+    * is refused rather than resolved to an arbitrary match; an
+    * unknown one is returned as given. */
+  def resolveKey(k: String): String =
+    if (queries.contains(k)) k
+    else queries.keys.filter(_.startsWith(k)).toSeq.sorted match {
+      case Seq(one) => one
+      case Seq() => k
+      case many => sys.error(s"ambiguous query prefix '$k': ${many.mkString(", ")}")
+    }
 }

@@ -85,19 +85,7 @@ object StreamDiag {
     }
     val keys = if (args.nonEmpty) args.toSeq else Seq("e44")
     for (k <- keys) {
-      // exact key first; a bare prefix must match exactly one query
-      // (e.g. "e2" hits e20/e21/e23/e26/e28 — refuse rather than
-      // profile an arbitrary one)
-      val full = SparkEntry.queries.get(k) match {
-        case Some(_) => k
-        case None =>
-          SparkEntry.queries.keys.filter(_.startsWith(k)).toSeq.sorted match {
-            case Seq(one) => one
-            case Seq() => k
-            case many => sys.error(
-              s"ambiguous query prefix '$k': ${many.mkString(", ")}")
-          }
-      }
+      val full = SparkEntry.resolveKey(k)
       println(s"[diag] === $full === t=${System.currentTimeMillis() % 1000000}")
       val t0 = System.nanoTime()
       SparkEntry.queries(full)(spark, sfDir)

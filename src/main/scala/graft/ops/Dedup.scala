@@ -338,21 +338,18 @@ object Dedup {
     * Recommend's modelCache; d13's alternating-star clustering stays
     * INDEPENDENT on purpose — its hash-equality to this labeling is
     * the two-algorithms-one-semantics gate, which sharing would
-    * vacate. Dead-context entries evicted the same way as memoKey. */
-  private val ccCache = Memo.register(scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+    * vacate. */
+  private val ccCache = Memo.artifact[DataFrame]("d08_cc_labels")
 
-  private def ccLabels(s: SparkSession, d: String): DataFrame = {
-    val prefix = s.sparkContext.applicationId + "#"
-    ccCache.keys.filterNot(_.startsWith(prefix)).foreach(ccCache.remove)
-    ccCache.getOrElseUpdate(prefix + d, {
+  private def ccLabels(s: SparkSession, d: String): DataFrame =
+    ccCache(s, d) {
       val edges = candidates(s, d) // (a, b), a < b — verified LSH pairs
         .cache()
       val labels = connectedComponents(edges).cache()
       labels.count() // materialize NOW — consumers must hit the cache
       edges.unpersist()
       labels
-    })
-  }
+    }
 
   def d08(s: SparkSession, d: String): DataFrame =
     clusterRollup(ccLabels(s, d))

@@ -503,10 +503,10 @@ object Graph {
     * SHARED ARTIFACT (g07's rollup and g08's modularity both consume
     * it), memoized per (session, dataset) under the round-6 rule: one
     * propagation run serves every community query. */
-  private val lpaCache = Memo.register(scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val lpaCache = Memo.artifact[DataFrame]("g07_lpa_labels")
 
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
-    lpaCache.getOrElseUpdate(Recommend.memoKey(s, d), {
+    lpaCache(s, d) {
       val edges = strongEdges(s, d).cache()
       var lab = Iterate.pin(
         edges.select(col("src").as("node")).distinct()
@@ -525,7 +525,7 @@ object Graph {
       }
       edges.unpersist()
       lab
-    })
+    }
 
   def g07(s: SparkSession, d: String): DataFrame =
     lpaLabels(s, d).groupBy("label")

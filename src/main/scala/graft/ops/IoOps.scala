@@ -241,8 +241,7 @@ object IoOps {
     * the deployment's steady state. Registered in Memo: family
     * boundaries clear it and the build ledger attributes the one
     * real build. */
-  private val graphDirCache = Memo.register(
-    scala.collection.concurrent.TrieMap.empty[String, String])
+  private val graphDirCache = Memo.artifact[String]("i32_graph_dir")
 
   def i32(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
@@ -258,15 +257,14 @@ object IoOps {
     // bench/soak session that is one orphaned index per e→i→... lap).
     // writeParquet overwrites, so a post-clear rebuild lands in place
     // and the session holds at most ONE artifact per dataset.
-    val dir = graphDirCache.getOrElseUpdate(
-      s.sparkContext.applicationId + "#" + d + "#i32dir", {
-        val fresh = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          "graft_i32_" + s.sparkContext.applicationId + "_" +
-            d.replaceAll("[^A-Za-z0-9]", "_")).toString
-        graphIndexWrite(base, fresh)
-        fresh
-      })
+    val dir = graphDirCache(s, d) {
+      val fresh = java.nio.file.Paths.get(
+        System.getProperty("java.io.tmpdir"),
+        "graft_i32_" + s.sparkContext.applicationId + "_" +
+          d.replaceAll("[^A-Za-z0-9]", "_")).toString
+      graphIndexWrite(base, fresh)
+      fresh
+    }
     val g0 = Io.readParquet(s, s"$dir/graph0").localCheckpoint()
     val g1 = Io.readParquet(s, s"$dir/graph1").localCheckpoint()
     val serve = Similarity.hnswServe(base, probeMax = 100, l1Mod = 50,
@@ -648,14 +646,11 @@ object IoOps {
     * deployment writes it once and every co-keyed join rides it; only
     * the first invocation per (application, dataset) pays the two
     * bucketed table writes (the round's shared-artifact rule). */
-  private val bucketCache =
-    Memo.register(scala.collection.concurrent.TrieMap.empty[String, (String, String)])
+  private val bucketCache = Memo.artifact[(String, String)]("i12_bucket_tables")
 
   def i12(s: SparkSession, d: String): DataFrame = {
-    val prefix = s.sparkContext.applicationId + "#"
-    bucketCache.keys.filterNot(_.startsWith(prefix)).foreach(bucketCache.remove)
     val (ordersTable, lineitemTable) =
-      bucketCache.getOrElseUpdate(prefix + d, {
+      bucketCache(s, d) {
         val suf = Integer.toHexString(d.hashCode)
         val (ot, lt) = (s"graft_i12_orders_$suf", s"graft_i12_lineitem_$suf")
         val dir = tmpDir("graft_i12_")
@@ -670,7 +665,7 @@ object IoOps {
           .bucketBy(16, "l_orderkey").sortBy("l_orderkey")
           .saveAsTable(lt)
         (ot, lt)
-      })
+      }
     val ob = s.table(ordersTable)
     val lb = s.table(lineitemTable)
     val joined = ob.hint("merge").join(lb, ob("o_orderkey") === lb("l_orderkey"))

@@ -67,7 +67,7 @@ object Iterate {
     * driver's 8-vs-32-core scaling block showed exactly that (8 cores
     * beat 32 on every g-family key). The pin is eager, so the
     * materialized byte size is already in the block manager: compact
-    * to ceil(bytes / spark.graft.pinPartitionBytes, default 8 MB)
+    * to ceil(bytes / spark.graft.pinPartitionBytes, default 32 MB)
     * partitions via a NARROW coalesce over the cached blocks — no
     * shuffle, no recompute, no extra job; a tiny frame collapses to 1
     * partition while a 100 TB one keeps its spread (the rule is bytes,

@@ -171,16 +171,12 @@ object Probes {
   // Bench's family-boundary clearAll() drops the checkpoints like
   // every other training artifact and the build ledger attributes
   // the one real build.
-  private val parentCache = Memo.register(
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+  private val parentCache = Memo.artifact[DataFrame]("probe_parent")
   private def sub(parentKey: String,
       parent: (SparkSession, String) => DataFrame,
-      cols: String*)(s: SparkSession, d: String): DataFrame = {
-    val memoKey =
-      s.sparkContext.applicationId + "#" + d + "#probe_" + parentKey
-    parentCache.getOrElseUpdate(memoKey, parent(s, d).localCheckpoint())
+      cols: String*)(s: SparkSession, d: String): DataFrame =
+    parentCache(s, d, parentKey)(parent(s, d).localCheckpoint())
       .select(cols.map(col): _*)
-  }
   private def subSql(parentSql: String, cols: String*): String =
     s"SELECT ${cols.mkString(", ")} FROM ($parentSql)"
 

@@ -25,15 +25,17 @@ object Bridge {
   /** For a just-(local)checkpointed Dataset — whose analyzed plan is a
     * LogicalRDD over the materialized, block-manager-cached internal
     * RDD — the cached byte size (memory + disk) and partition count.
-    * None when the plan isn't a LogicalRDD or the blocks aren't
-    * tracked (e.g. a reliable checkpoint, which writes files instead).
-    * Driver-side metadata lookup only; never runs a job. */
+    * None when the plan isn't a LogicalRDD, the blocks aren't tracked
+    * (e.g. a reliable checkpoint, which writes files instead) or some
+    * partition is no longer cached — the bytes of a partially evicted
+    * frame would under-count it. A metadata lookup only; never runs
+    * a job. */
   def cachedSize(df: org.apache.spark.sql.DataFrame): Option[(Long, Int)] =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         df.sparkSession.sparkContext.getRDDStorageInfo
           .find(_.id == lr.rdd.id)
-          .filter(_.numCachedPartitions > 0)
+          .filter(_.numCachedPartitions == lr.rdd.getNumPartitions)
           .map(i => (i.memSize + i.diskSize, lr.rdd.getNumPartitions))
       case _ => None
     }
