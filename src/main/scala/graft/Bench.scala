@@ -254,15 +254,20 @@ object Bench {
     def execJ(keys: Iterable[String]): String = keys.flatMap { k =>
       shortExecMap.get(k).map(v => "\"" + k + "\":[" + v.mkString(",") + "]")
     }.mkString("{", ",", "}")
+    // task slots as the session resolved them (SPARK_GRAFT_CPUS may be *)
+    val slots = spark.sparkContext.defaultParallelism
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""runs":2,"n_queries":${results.size},"total_mean":$totalMean,""" +
+      s""""cpus":$slots,"runs":2,"n_queries":${results.size},"total_mean":$totalMean,""" +
       s"""$gcJit,$memoDiag,"queries":${jmap(short, _._1)},""" +
       s""""queries_mean":${jmap(short, _._2)},""" +
       s""""queries_runs":${runsJ(shortRuns.map(_._1))},""" +
       s""""queries_exec":${execJ(shortRuns.map(_._1))},""" +
       s""""queries_stream":$streamJ,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_FULL.json"), fullJson + "\n")
+    // the per-width copy keeps an 8-core run from being overwritten
+    // by a 32-core one (and the reverse)
+    Seq("BENCH_FULL.json", s"BENCH_FULL_c$slots.json").foreach { f =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(f), fullJson + "\n")
+    }
     val bySlowest = short.sortBy(-_._2._1)
     // the printed line carries full run/build/exec attribution for the
     // driver-host watch keys — r10's unattributed lines (the evalRecs

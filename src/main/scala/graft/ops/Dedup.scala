@@ -37,15 +37,41 @@ object Dedup {
 
   // ---- shared corpus + shingle machinery ----
 
-  private def corpus(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select("doc_id", "text")
-    docs
-      .union(docs.filter(col("doc_id") % 100 === 0)
-        .select((col("doc_id") + 2000000).as("doc_id"), col("text")))
-      .union(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" graft dedup probe tail")).as("text")))
+  private val CopyOffset = 2000000L
+  private val TailOffset = 1000000L
+
+  /** The augmented corpus from ONE scan of `docs` (any frame with a
+    * `doc_id`): every row, plus an exact copy (+2_000_000) of every
+    * 100th doc and a tail copy (+1_000_000) of every 50th, fanned out
+    * by an explode over per-row id offsets. A union of three scans
+    * would read the corpus three times: a `% 100` filter prunes no
+    * row group. `aug_off` (0 on originals) tells the copies apart, so
+    * callers derive the columns a copy changes ([[augmentedText]]). */
+  private[ops] def augmented(docs: DataFrame): DataFrame = {
+    val id = col("doc_id")
+    def offsets(o: Long*): Column = array(o.map(lit): _*)
+    docs.withColumn("aug_off", explode(
+        when(id % 100 === 0, offsets(0L, CopyOffset, TailOffset))
+          .when(id % 50 === 0, offsets(0L, TailOffset))
+          .otherwise(offsets(0L))))
+      .withColumn("doc_id", id + col("aug_off"))
   }
+
+  /** `text` of an [[augmented]] row: tail copies get the probe tail. */
+  private[ops] val augmentedText: Column =
+    when(col("aug_off") === TailOffset,
+      concat(col("text"), lit(" graft dedup probe tail")))
+      .otherwise(col("text")).as("text")
+
+  private def corpus(s: SparkSession, d: String): DataFrame =
+    augmented(Tables.documents(s, d).select("doc_id", "text"))
+      .select(col("doc_id"), augmentedText)
+
+  /** Only the copies [[augmented]] adds to `docs` (doc_id, text): the
+    * arrivals e14 streams against the original corpus. */
+  private def augmentedCopies(docs: DataFrame): DataFrame =
+    augmented(docs).filter(col("aug_off") =!= 0L)
+      .select(col("doc_id"), augmentedText)
 
   private val sqlCorpus: String =
     """SELECT doc_id, text FROM documents
@@ -487,12 +513,10 @@ object Dedup {
   // copies are tagged 'copy'/'tail' so off-diagonal mass exists by
   // construction and the oracle reproduces it.
   def d10(s: SparkSession, d: String): DataFrame = {
-    val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
-    val srcMap = src
-      .union(src.filter(col("doc_id") % 100 === 0)
-        .select((col("doc_id") + 2000000).as("doc_id"), lit("copy").as("source")))
-      .union(src.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), lit("tail").as("source")))
+    val srcMap = augmented(Tables.documents(s, d).select("doc_id", "source"))
+      .select(col("doc_id"), when(col("aug_off") === CopyOffset, "copy")
+        .when(col("aug_off") === TailOffset, "tail")
+        .otherwise(col("source")).as("source"))
     candidates(s, d)
       .join(srcMap.withColumnRenamed("doc_id", "a")
         .withColumnRenamed("source", "src_of_a"), Seq("a"))
@@ -532,11 +556,7 @@ object Dedup {
   // survives).
   def e14(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val arrivals = docs.filter(col("doc_id") % 100 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"), col("text"))
-      .union(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" graft dedup probe tail")).as("text")))
+    val arrivals = augmentedCopies(docs)
     // per-invocation landing dir, deleted in the finally below: a
     // fixed shared dir let two concurrent invocations (StreamingSpec
     // + a Verify run) overwrite files while the other's file-source
@@ -584,11 +604,7 @@ object Dedup {
     * stream ≡ batch on the identical arrivals/index inputs. */
   def e14BatchTwin(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val arrivals = docs.filter(col("doc_id") % 100 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"), col("text"))
-      .union(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" graft dedup probe tail")).as("text")))
+    val arrivals = augmentedCopies(docs)
     val corpusIndex = bands(sigsFor(docs)).select("band", "bucket")
     bands(sigsFor(arrivals))
       .join(broadcast(corpusIndex), Seq("band", "bucket"), "left_semi")

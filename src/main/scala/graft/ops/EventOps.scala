@@ -261,22 +261,31 @@ object EventOps {
     }
   }
 
+  /** Runs `w` AvailableNow (see [[runAvailableNow]]) into a fresh
+    * memory sink and returns the sink's rows. The frame resolves the
+    * sink relation here, so the sink's temp view is dropped before
+    * returning: a long-lived session gains no view per call. */
+  private[ops] def memorySinkRows(s: SparkSession, key: String,
+      w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+      : DataFrame = {
+    val sink = s"graft_${key}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      runAvailableNow(key, w.format("memory").queryName(sink))
+      s.table(sink)
+    } finally s.catalog.dropTempView(sink)
+  }
+
   // e06: the SAME hourly rollup as e01, computed through Structured
   // Streaming (file micro-batches → complete-mode memory sink) and
   // checked against e01's oracle — proving batch/stream symmetry.
-  def e06(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_e06_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def e06(s: SparkSession, d: String): DataFrame =
     withStreamPartitions(s, eventsParts(s, d)) {
-      runAvailableNow("e06", graft.streaming.Streams
+      memorySinkRows(s, "e06", graft.streaming.Streams
         .tumblingCounts(graft.streaming.Streams.eventStream(s, d))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(sink))
-    }
-    s.table(sink)
-      .select(unix_micros(col("hour")).as("hour_us"), col("event_type"),
+        .writeStream.outputMode("complete"))
+    }.select(unix_micros(col("hour")).as("hour_us"), col("event_type"),
         col("n"), col("sum_value"))
       .orderBy("hour_us", "event_type")
-  }
 
   // e07: gap sessionization through the STATEFUL API
   // (flatMapGroupsWithState, same code path the streaming variant
@@ -326,19 +335,14 @@ object EventOps {
   // hour, per user) run through Structured Streaming micro-batches and
   // gated against DuckDB's batch interval join — the join-state
   // eviction semantics under the correctness gate, not just ScalaTest.
-  def e09(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_e09_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def e09(s: SparkSession, d: String): DataFrame =
     withStreamPartitions(s, eventsParts(s, d)) {
-      runAvailableNow("e09", graft.streaming.Streams
+      memorySinkRows(s, "e09", graft.streaming.Streams
         .purchaseClickPairs(graft.streaming.Streams.eventStream(s, d))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(sink))
-    }
-    s.table(sink)
-      .groupBy(col("p_user").as("user_id"))
+        .writeStream.outputMode("append"))
+    }.groupBy(col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
-  }
 
   val e09Sql: String =
     """SELECT p.user_id, count(*) AS n_pairs
@@ -350,19 +354,14 @@ object EventOps {
   // e10: streaming dedup under the gate — dropDuplicates over
   // micro-batches, then a batch rollup of the deduped sink; the oracle
   // is the batch count(DISTINCT), so the stream must dedup exactly.
-  def e10(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_e10_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def e10(s: SparkSession, d: String): DataFrame =
     withStreamPartitions(s, eventsParts(s, d)) {
-      runAvailableNow("e10", graft.streaming.Streams
+      memorySinkRows(s, "e10", graft.streaming.Streams
         .dedupPairs(graft.streaming.Streams.eventStream(s, d))
-        .writeStream.outputMode("append")
-        .format("memory").queryName(sink))
-    }
-    s.table(sink)
-      .groupBy("event_type")
+        .writeStream.outputMode("append"))
+    }.groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
-  }
 
   val e10Sql: String =
     """SELECT event_type, count(DISTINCT user_id) AS n_users
@@ -376,22 +375,17 @@ object EventOps {
   // watermark 60 — so within-horizon dedup here equals exact distinct
   // and the e10 oracle gates it; on a real endless stream only the
   // eviction behavior differs, which is exactly the point.
-  def e19(s: SparkSession, d: String): DataFrame = {
-    val sink = "graft_e19_" + java.util.UUID.randomUUID().toString.replace("-", "")
+  def e19(s: SparkSession, d: String): DataFrame =
     withStreamPartitions(s, eventsParts(s, d)) {
-      runAvailableNow("e19", graft.streaming.Streams.eventStream(s, d)
+      memorySinkRows(s, "e19", graft.streaming.Streams.eventStream(s, d)
         .withWatermark("ts", "60 days")
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .writeStream.outputMode("append")
-        .format("memory").queryName(sink))
-    }
-    s.table(sink)
-      .groupBy("event_type")
+        .writeStream.outputMode("append"))
+    }.groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
       .localCheckpoint()
-  }
 
   // e11: stream-static enrichment join — the stream picks up a
   // per-user segment from a (broadcast) batch dimension, then a batch
@@ -400,12 +394,9 @@ object EventOps {
   def e11(s: SparkSession, d: String): DataFrame = {
     val dim = graft.Tables.events(s, d).select("user_id").distinct()
       .withColumn("seg", col("user_id") % 5)
-    val sink = "graft_e11_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    runAvailableNow("e11", graft.streaming.Streams
-      .enrich(graft.streaming.Streams.eventStream(s, d), dim)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(sink))
-    s.table(sink)
+    memorySinkRows(s, "e11", graft.streaming.Streams
+        .enrich(graft.streaming.Streams.eventStream(s, d), dim)
+        .writeStream.outputMode("append"))
       .groupBy("seg", "event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("seg", "event_type")
@@ -457,13 +448,11 @@ object EventOps {
     val hk = when(col("user_id") % 3 === 0,
       concat(lit("hot"), (col("user_id") % 4).cast("string")))
       .otherwise(concat(lit("u"), col("user_id").cast("string")))
-    val sink = "graft_e13_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    runAvailableNow("e13", graft.streaming.Streams.eventStream(s, d)
-      .select(hk.as("hk"))
-      .agg(graft.functions.MisraGriesAgg.misraGries(col("hk"), k).as("mg"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(sink))
-    val sketch = s.table(sink).select(col("mg"))
+    val sketch = memorySinkRows(s, "e13", graft.streaming.Streams.eventStream(s, d)
+        .select(hk.as("hk"))
+        .agg(graft.functions.MisraGriesAgg.misraGries(col("hk"), k).as("mg"))
+        .writeStream.outputMode("complete"))
+      .select(col("mg"))
     val keyed = Tables.events(s, d).select(hk.as("hk"))
     val exact = keyed.groupBy("hk").agg(count(lit(1)).as("cnt"))
     val totals = keyed.agg(count(lit(1)).as("n"))
@@ -1465,16 +1454,12 @@ object EventOps {
           .as("sum_value"))
       .select(unix_micros(col("w.start")).as("hour_us"), col("event_type"),
         col("n"), col("sum_value"))
-    val sink = "graft_e26_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStreamPartitions(s, eventsParts(s, d)) {
-      runAvailableNow("e26", graft.streaming.Streams.tumblingCounts(
+    val streamPart = withStreamPartitions(s, eventsParts(s, d)) {
+      memorySinkRows(s, "e26", graft.streaming.Streams.tumblingCounts(
           graft.streaming.Streams.eventStream(s, d)
             .filter(unix_micros(col("ts")) >= cutoffUs))
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(sink))
-    }
-    val streamPart = s.table(sink)
-      .select(unix_micros(col("hour")).as("hour_us"), col("event_type"),
+        .writeStream.outputMode("complete"))
+    }.select(unix_micros(col("hour")).as("hour_us"), col("event_type"),
         col("n"), col("sum_value"))
     batchPart.unionByName(streamPart).orderBy("hour_us", "event_type")
   }

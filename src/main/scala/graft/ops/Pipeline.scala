@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -12,89 +12,71 @@ import graft.functions.Hashing
   * emitting the per-language funnel (how many documents survive each
   * stage). Every stage reuses a gated operator's machinery — t02's
   * quality features, t03's language argmax, t04's fingerprint, d04's
-  * verified LSH pairs, t12's hash-ordered stratified cap — so the
-  * composition is checkable end-to-end by the same DuckDB oracle.
+  * verified LSH pairs, t12's stratified cap — so the composition is
+  * checkable end-to-end by the same DuckDB oracle.
   *
-  * Scale shape: the funnel is a linear chain of per-row stages with
-  * exactly three shuffles (exact-dedup groupBy fp, the near-dup drop's
-  * LSH machinery — candidates only, never all-pairs — and the final
-  * per-language cap/rollup). At 100 TB this is the plan you want: one
-  * corpus scan feeds the whole chain, Catalyst collapses the per-row
-  * stages into one codegen stage, and every dedup decision is keyed
-  * (fp / band-bucket), never pairwise.
+  * Scale shape: p01 and its ablation matrix p14 read one flag table
+  * (`curationFlags`): one scan of the augmented corpus computes every
+  * per-row flag, and a left join adds d04's near-dup drop set, whose
+  * LSH machinery reads the corpus a second time (candidates only,
+  * never all-pairs). Every stage after that is boolean algebra over
+  * the flags; the one stage that depends on which rows survive
+  * upstream, exact dedup, is a conditional MIN window over one fp
+  * exchange, and the funnel is one per-language aggregation. No
+  * cache, no per-stage count branches, no joins between them.
   */
 object Pipeline {
 
-  def p01(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-    // the d-series augmentation, with lang carried so the funnel can
-    // report per-language (copies keep their source's lang)
-    val aug = docs
-      .union(docs.filter(col("doc_id") % 100 === 0)
-        .select((col("doc_id") + 2000000).as("doc_id"), col("lang"), col("text")))
-      .union(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("lang"),
-          concat(col("text"), lit(" graft dedup probe tail")).as("text")))
-    // Stages 1–2 compute as PER-ROW FLAGS on one corpus pass, cached:
-    // the funnel's count branches would otherwise re-scan and
-    // re-tokenize the corpus once per stage (the first cut of this
-    // query planned 6 full prefix recomputations — 132 exchanges).
-    // stage 1 — quality: ≥10 tokens, stopword ratio ≤ 1/2 (t02)
-    // stage 2 — language consistency: t03 argmax = declared label
+  /** The curation funnel's per-document flag table, from ONE scan of
+    * the augmented corpus (the d-series augmentation, lang carried so
+    * the funnel reports per language; copies keep their source's
+    * lang): doc_id, lang, fp (t04's normalized-text fingerprint),
+    * q_ok (t02's bar: ≥10 tokens, stopword ratio ≤ 1/2), l_ok (the
+    * PURE language flag: t03's argmax equals the declared label) and
+    * nd_drop (the doc is the higher side of a d04-verified pair). */
+  private def curationFlags(s: SparkSession, d: String): DataFrame = {
+    val aug = Dedup.augmented(Tables.documents(s, d).select("doc_id", "lang", "text"))
+      .select(col("doc_id"), col("lang"), Dedup.augmentedText)
     val stopArr = array(TextOps.stopwords.map(lit): _*)
-    val fp = md5(regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""))
-    val flagged = TextOps.withLangCounts(aug
-      .withColumn("toks", graft.functions.TextNorm.tokens(col("text")))
-      .withColumn("n_tokens", size(col("toks")))
-      .withColumn("n_stop",
-        size(filter(col("toks"), t => array_contains(stopArr, t))))
-      .withColumn("q_ok", col("n_tokens") >= 10 &&
-        col("n_stop") * 2 <= col("n_tokens")))
-      .withColumn("l_ok", col("q_ok") && TextOps.predictedCol === col("lang"))
-      .select(col("doc_id"), col("lang"), col("q_ok"), col("l_ok"),
-        fp.as("fp"))
-      .cache()
-    // stage 3 — exact dedup: keep the lowest doc_id per normalized
-    // fingerprint among stage-2 survivors (t04's key; groupBy +
-    // semi-join, no window sort)
-    val survivors = flagged.filter(col("l_ok"))
-    val firstPerFp = survivors.groupBy("fp").agg(min("doc_id").as("doc_id"))
-    val exactKept = survivors.join(firstPerFp, Seq("fp", "doc_id"), "left_semi")
-    // stage 4 — near-dup drop: the higher side of every d04-verified
-    // LSH pair goes (global keep-lowest); candidates-only work
+    val flags = TextOps.withLangCounts(aug
+        .withColumn("toks", graft.functions.TextNorm.tokens(col("text")))
+        .withColumn("n_tokens", size(col("toks")))
+        .withColumn("n_stop",
+          size(filter(col("toks"), t => array_contains(stopArr, t)))))
+      .select(col("doc_id"), col("lang"),
+        md5(regexp_replace(lower(col("text")), "[^a-z0-9 ]", "")).as("fp"),
+        (col("n_tokens") >= 10 && col("n_stop") * 2 <= col("n_tokens")).as("q_ok"),
+        (TextOps.predictedCol === col("lang")).as("l_ok"))
     val dropB = Dedup.d04(s, d).select(col("b").as("doc_id")).distinct()
-    val nearKept = exactKept.join(dropB, Seq("doc_id"), "left_anti")
-    // stage 5 — stratified cap: ≤15 docs per language by md5-hash
-    // order (t12's auditable, engine-portable pick)
-    val w = Window.partitionBy("lang").orderBy(col("hkey"), col("doc_id"))
-    val capped = nearKept
-      .withColumn("hkey", Hashing.hash56(concat_ws("#", col("lang"), col("doc_id"))))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 15)
-    // the funnel: stages 1–2 fold into ONE aggregation over the cached
-    // flags; the three dedup/cap stages count from their (cached-
-    // backed) survivors
-    def cnt(df: DataFrame, name: String): DataFrame =
-      df.groupBy("lang").agg(count(lit(1)).as(name))
-    val funnel = flagged.groupBy("lang").agg(
+      .withColumn("nd", lit(true))
+    flags.join(dropB, Seq("doc_id"), "left")
+      .withColumn("nd_drop", coalesce(col("nd"), lit(false)))
+      .drop("nd")
+  }
+
+  /** p01: the funnel as one aggregation over [[curationFlags]]. The
+    * language stage nests under quality; exact dedup keeps the lowest
+    * doc_id per fp among those survivors (a conditional MIN window);
+    * near-dup drops the flagged side. The stratified cap keeps the
+    * first 15 docs per language in t12's hash order, and a
+    * row_number ≤ 15 cap keeps exactly min(n, 15) rows, so its count
+    * is `least(n_neardup, 15)` — the pick itself is t12's gate. */
+  def p01(s: SparkSession, d: String): DataFrame = {
+    val langOk = col("q_ok") && col("l_ok")
+    val kept = langOk && col("doc_id") ===
+      min(when(langOk, col("doc_id"))).over(Window.partitionBy("fp"))
+    def n(c: Column): Column = count(when(c, 1))
+    curationFlags(s, d)
+      .select(col("lang"), col("q_ok"), langOk.as("l_ok"), kept.as("exact"),
+        col("nd_drop"))
+      .groupBy("lang").agg(
         count(lit(1)).as("n_raw"),
-        sum(col("q_ok").cast("long")).as("n_quality"),
-        sum(col("l_ok").cast("long")).as("n_lang_match"))
-      .join(cnt(exactKept, "n_exact"), Seq("lang"), "left")
-      .join(cnt(nearKept, "n_neardup"), Seq("lang"), "left")
-      .join(cnt(capped, "n_final"), Seq("lang"), "left")
-      .na.fill(0L)
+        n(col("q_ok")).as("n_quality"),
+        n(col("l_ok")).as("n_lang_match"),
+        n(col("exact")).as("n_exact"),
+        n(col("exact") && !col("nd_drop")).as("n_neardup"))
+      .withColumn("n_final", least(col("n_neardup"), lit(15L)))
       .orderBy("lang")
-    // Materialize the (per-language, ~handful-of-rows) funnel eagerly
-    // so the corpus-flag cache can be released before returning — the
-    // driver runs all 120 gated queries in one session, and a pinned
-    // cache per p01 invocation would accumulate for the session's
-    // lifetime. localCheckpoint truncates lineage, so the returned
-    // plan no longer references `flagged`; its tiny blocks are
-    // ContextCleaner-collected when the DataFrame is GC'd.
-    val out = funnel.localCheckpoint()
-    flagged.unpersist()
-    out
   }
 
   val p01Sql: String =
@@ -1207,39 +1189,19 @@ object Pipeline {
   // near-dup — reporting the final survivor count and its delta vs
   // the full pipeline. The trap is cost: rerunning the funnel once
   // per ablation is 5 corpus scans. Here every ablation is BOOLEAN
-  // ALGEBRA over ONE flag table: per-row q/l flags and the near-dup
-  // drop set are ablation-independent; the only stage whose outcome
-  // DEPENDS on which rows survive upstream is exact dedup
-  // (keep-lowest runs among that ablation's filter survivors), so
-  // the three distinct keep-lowest keys are three conditional MIN
-  // windows SHARING the single fp exchange. One corpus scan, one
-  // shuffle, five ablations. Note l_ok here is the PURE language
-  // flag (p01 nests it under quality; ablating quality requires the
-  // unnested form). Stage deltas pinned non-vacuous in OpsSpec.
+  // ALGEBRA over p01's flag table (curationFlags): per-row q/l flags
+  // and the near-dup drop flag are ablation-independent; the only
+  // stage whose outcome DEPENDS on which rows survive upstream is
+  // exact dedup (keep-lowest runs among that ablation's filter
+  // survivors), so the three distinct keep-lowest keys are three
+  // conditional MIN windows SHARING the single fp exchange. One flag
+  // scan, one fp shuffle, five ablations. l_ok is the table's PURE
+  // language flag (p01 nests it under quality; ablating quality
+  // requires the unnested form). Stage deltas pinned non-vacuous in
+  // OpsSpec.
   def p14(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
-    val aug = docs
-      .union(docs.filter(col("doc_id") % 100 === 0)
-        .select((col("doc_id") + 2000000).as("doc_id"), col("lang"), col("text")))
-      .union(docs.filter(col("doc_id") % 50 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("lang"),
-          concat(col("text"), lit(" graft dedup probe tail")).as("text")))
-    val stopArr = array(TextOps.stopwords.map(lit): _*)
-    val fp = md5(regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""))
-    val flagged = TextOps.withLangCounts(aug
-        .withColumn("toks", graft.functions.TextNorm.tokens(col("text")))
-        .withColumn("n_tokens", size(col("toks")))
-        .withColumn("n_stop",
-          size(filter(col("toks"), t => array_contains(stopArr, t))))
-        .withColumn("q_ok", col("n_tokens") >= 10 &&
-          col("n_stop") * 2 <= col("n_tokens")))
-      .withColumn("l_ok", TextOps.predictedCol === col("lang"))
-      .select(col("doc_id"), col("q_ok"), col("l_ok"), fp.as("fp"))
-    val dropB = Dedup.d04(s, d).select(col("b").as("doc_id")).distinct()
-      .withColumn("nd", lit(true))
     val wFp = Window.partitionBy("fp")
-    val marked = flagged.join(dropB, Seq("doc_id"), "left")
-      .withColumn("nd_drop", coalesce(col("nd"), lit(false)))
+    val marked = curationFlags(s, d)
       .withColumn("min_ql",
         min(when(col("q_ok") && col("l_ok"), col("doc_id"))).over(wFp))
       .withColumn("min_l", min(when(col("l_ok"), col("doc_id"))).over(wFp))

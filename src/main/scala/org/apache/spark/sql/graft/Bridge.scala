@@ -28,15 +28,21 @@ object Bridge {
     * None when the plan isn't a LogicalRDD, the blocks aren't tracked
     * (e.g. a reliable checkpoint, which writes files instead) or some
     * partition is no longer cached — the bytes of a partially evicted
-    * frame would under-count it. A metadata lookup only; never runs
-    * a job. */
+    * frame would under-count it. Sized from the block manager master,
+    * which every block put or removal reports to synchronously (the
+    * UI status store lags behind on the listener bus). A metadata
+    * lookup only; never runs a job. */
   def cachedSize(df: org.apache.spark.sql.DataFrame): Option[(Long, Int)] =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .filter(_.numCachedPartitions == lr.rdd.getNumPartitions)
-          .map(i => (i.memSize + i.diskSize, lr.rdd.getNumPartitions))
+        val (id, n) = (lr.rdd.id, lr.rdd.getNumPartitions)
+        val blocks = org.apache.spark.SparkEnv.get.blockManager.master
+          .getStorageStatus.toSeq.flatMap(_.rddBlocks).collect {
+            case (org.apache.spark.storage.RDDBlockId(`id`, p), b) if b.isCached =>
+              (p, b.memSize + b.diskSize)
+          }
+        if (blocks.map(_._1).distinct.size == n) Some((blocks.map(_._2).sum, n))
+        else None
       case _ => None
     }
 }

@@ -2575,6 +2575,29 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("p01: the funnel narrows per language and agrees with p14's full pipeline") {
+    def funnel(dir: String): String => Long = {
+      val rows = ops.Pipeline.p01(spark, dir).collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        val n = Seq("n_raw", "n_quality", "n_lang_match", "n_exact",
+          "n_neardup", "n_final").map(r.getAs[Long])
+        assert(n.sliding(2).forall { case Seq(a, b) => a >= b }, s"not monotone: $r")
+        assert(n.last == math.min(n(4), 15L), s"cap is not least(n_neardup, 15): $r")
+      }
+      c => rows.map(_.getAs[Long](c)).sum
+    }
+    val total = funnel(sf)
+    val full = ops.Pipeline.p14(spark, sf).collect()
+      .find(_.getAs[String]("ablation") == "a_full").get.getAs[Long]("n_final")
+    assert(total("n_neardup") == full)
+    assert(total("n_neardup") < total("n_exact"), "near-dup dropped nothing")
+    // every planted exact copy at sf0.001 fails the language stage;
+    // sf0.01 (also 500 docs) plants one that survives it
+    val other = funnel(sf.stripSuffix("sf0.001") + "sf0.01")
+    assert(other("n_exact") < other("n_lang_match"), "exact dedup dropped nothing")
+  }
+
   test("p14: every ablation loosens the funnel and each stage provably bites") {
     val rows = ops.Pipeline.p14(spark, sf).collect()
       .map(r => r.getAs[String]("ablation") ->

@@ -212,6 +212,24 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), "corpus total not broadcast")
   }
 
+  test("p01 caches nothing and reads documents through at most two scans") {
+    val df = ops.Pipeline.p01(spark, sf)
+    assert(df.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }.isEmpty, "p01 caches a frame")
+    df.collect() // AQE settles exchange reuse at execution
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val scans = aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.getName == "documents.parquet") =>
+        (f.requiredSchema, f.dataFilters)
+    }
+    // the flag table's scan and the LSH input's (which d04's shingle
+    // branch reads again, identically); a three-way union per corpus
+    // adds a filtered scan for each copy kind
+    assert(scans.nonEmpty && scans.distinct.size <= 2, scans.mkString("\n"))
+  }
+
   test("t17/t18 scans prune to the columns the ops read") {
     val p17 = plan(ops.TextOps.t17(spark, sf))
     assert(p17.contains("ReadSchema") && !p17.contains("n_chars"),

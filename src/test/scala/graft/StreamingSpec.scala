@@ -29,6 +29,12 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.values.sum >= batch.values.sum / 2)
   }
 
+  test("e06 drops its memory-sink view and its frames still collect") {
+    val frames = Seq.fill(2)(ops.EventOps.e06(spark, sf))
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_e06_")))
+    frames.foreach(f => assert(f.collect().nonEmpty))
+  }
+
   test("streaming dedup drops replayed events within the watermark") {
     val stream = streaming.Streams.eventStream(spark, sf)
     // replay the same source twice (union) — dropDuplicates on the key

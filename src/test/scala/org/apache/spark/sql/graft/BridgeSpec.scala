@@ -8,12 +8,15 @@ class BridgeSpec extends graft.SparkSpec {
   test("cachedSize reports a pinned frame only while every partition is cached") {
     val pinned = spark.range(0, 400, 1, 4).toDF("id").localCheckpoint()
     val rddId = pinned.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+    // read right after the checkpoint, with nothing draining the
+    // listener bus: the size comes from the block manager master
     val Some((bytes, parts)) = Bridge.cachedSize(pinned): @unchecked
-    assert(bytes > 0 && parts == 4)
+    val blockBytes = (0 until 4).map { p =>
+      val st = SparkEnv.get.blockManager.getStatus(RDDBlockId(rddId, p)).get
+      st.memSize + st.diskSize
+    }
+    assert(parts == 4 && bytes > 0 && bytes == blockBytes.sum)
     SparkEnv.get.blockManager.removeBlock(RDDBlockId(rddId, 0))
-    // storage info is read from the status store, which the listener
-    // bus updates asynchronously
-    spark.sparkContext.listenerBus.waitUntilEmpty()
     assert(Bridge.cachedSize(pinned).isEmpty)
   }
 }
