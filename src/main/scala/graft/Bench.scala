@@ -26,10 +26,9 @@ object Bench {
     try {
       SparkEntry.queries("q06_forecast_revenue")(spark, sfDir).count()
       import org.apache.spark.sql.functions.col
-      new org.apache.spark.ml.recommendation.ALS()
+      graft.api.Recommend.als(2000)
         .setUserCol("user_id").setItemCol("item_id").setRatingCol("rating")
-        .setImplicitPrefs(true).setRank(2).setMaxIter(1).setSeed(1L)
-        .setNumUserBlocks(4).setNumItemBlocks(4)
+        .setImplicitPrefs(true).setRank(2).setMaxIter(1)
         .fit(graft.etl.Ratings.implicitRatings(spark, sfDir)
           .limit(2000)
           .select(col("user_id").cast("int"), col("item_id").cast("int"),

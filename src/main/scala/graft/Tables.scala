@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers for the driver testdata layout.
   *
@@ -11,10 +13,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * At cluster scale the same API would point at partitioned/bucketed
   * warehouse paths; locally it reads the single driver-generated file.
+  *
+  * Schema inference is a one-task parquet-footer job per read, so each
+  * table's inferred schema is memoized per (session, path, modification
+  * time) and later reads pass it to the reader: a rewritten file gets a
+  * new key. [[events]] sets `nanosAsLong` before every read, so its
+  * schema is always inferred under that conf.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = graft.ops.Memo.artifact[StructType]("parquet_schema")
+
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val st = schemas(spark, path, mtime.toString)(spark.read.parquet(path).schema)
+    spark.read.schema(st).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")

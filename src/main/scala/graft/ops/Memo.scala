@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** The one store for per-(session, dataset) training artifacts (ALS
-  * models, centroid arrays, checkpointed rating splits, ...).
+  * models, centroid arrays, checkpointed rating splits, ...) and for
+  * the parquet schemas [[graft.Tables]] resolves.
   *
   * Declare an artifact once per module and call it with its build:
   * {{{
@@ -50,7 +51,7 @@ object Memo {
   }
 
   /** Declare a memoized artifact; `name` labels its builds in the ledger. */
-  private[ops] def artifact[V](name: String): Artifact[V] = {
+  private[graft] def artifact[V](name: String): Artifact[V] = {
     val a = new Artifact[V](name)
     registry.add(a)
     a

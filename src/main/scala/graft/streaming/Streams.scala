@@ -25,13 +25,13 @@ object Streams {
     * (readable only as long via the legacy conf → div 1000 to micros)
     * and native TIMESTAMP(MICROS) (declared TIMESTAMP_NTZ, cast to the
     * UTC-pinned session type). A stream source needs a user-declared
-    * schema, so probe the batch read's resolved schema first — a
-    * hard-coded encoding silently collapses every watermark/window
-    * when the testdata generation flips (round-6 e06/e09 red wave).
-    * maxFilesPerTrigger keeps micro-batches bounded. */
+    * schema, so probe the batch read's resolved schema first (memoized
+    * by Tables.read) — a hard-coded encoding silently collapses every
+    * watermark/window when the testdata generation flips (round-6
+    * e06/e09 red wave). maxFilesPerTrigger keeps micro-batches bounded. */
   def eventStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val nanosAsLong = s.read.parquet(s"$d/events.parquet")
+    val nanosAsLong = graft.Tables.read(s, d, "events")
       .schema("ts").dataType == org.apache.spark.sql.types.LongType
     val tsDecl = if (nanosAsLong) "LONG" else "TIMESTAMP_NTZ"
     val schema = s"event_id LONG, ts $tsDecl, user_id LONG, " +

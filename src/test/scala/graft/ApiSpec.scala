@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
   * USER-SCHEMA DataFrame built inline here — different column names,
   * no testdata directory anywhere — and its semantics replay
   * driver-side. (Oracle parity for the same kernels is covered by the
-  * gated dNN/sNN keys, which delegate to graft.api.) */
+  * gated dNN/sNN keys and the recommender's ALS and r12/r17/r20 keys,
+  * which delegate to graft.api.) */
 class ApiSpec extends SparkSpec {
 
   // a tiny user corpus with its OWN schema: planted exact duplicate

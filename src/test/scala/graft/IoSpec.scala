@@ -19,6 +19,35 @@ class IoSpec extends SparkSpec {
       docs.agg(sum("n_chars")).collect()(0).getLong(0))
   }
 
+  test("a table's schema resolves once: the second read starts no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    Tables.orders(spark, sf) // resolves (or finds) the memoized schema
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = String.valueOf(e.properties.getProperty("spark.jobGroup.id"))
+        groups.add(g)
+        if (g == "tables-marker") marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    val again = try {
+      sc.setJobGroup("tables-read", "second orders read")
+      val df = Tables.orders(spark, sf)
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, every job the read could have started has arrived too
+      sc.setJobGroup("tables-marker", "listener-bus marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      df
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(!groups.contains("tables-read"))
+    assert(again.collect().toSet ==
+      spark.read.parquet(s"$sf/orders.parquet").collect().toSet)
+  }
+
   test("jsonl round-trip preserves rows") {
     val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type", "value")
     val dir = tmp() + "/events_json"

@@ -98,6 +98,26 @@ class RecommendSpec extends SparkSpec {
     assert(gates.getAs[Boolean]("unseen_ok"))
   }
 
+  test("the public api.Recommend.alsTopK serves exactly the gated alsTop5 rows") {
+    val public = graft.api.Recommend.alsTopK(etl.Ratings.implicitRatings(spark, sf),
+      "user_id", "item_id", "rating")
+    val gated = ops.Recommend.alsTop5(spark, sf)
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.select("user_id", "rank", "item_id", "score").collect().toSet
+    val got = rows(public)
+    assert(got.nonEmpty)
+    assert(got == rows(gated))
+  }
+
+  test("ALS block count follows the rating count, not the cores") {
+    import graft.api.Recommend.{alsBlocks, RatingsPerBlock => r}
+    assert(alsBlocks(0L) == 4)
+    assert(alsBlocks(59391L) == 4) // sf0.01
+    assert(alsBlocks(4 * r) == 4)
+    assert(alsBlocks(4 * r + 1) == 5)
+    assert(alsBlocks(10 * r) == 10)
+  }
+
   test("r11 factor neighbors: 5 ranked per probe, cosine in [-1,1]") {
     val rows = ops.Recommend.itemNeighbors(spark, sf).collect()
     val byProbe = rows.groupBy(_.getAs[Long]("probe_item"))

@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
   * the build ledger. */
 class MemoSpec extends AnyFunSuite {
   private def all: Seq[Artifact[Any]] = {
-    // the ops modules declare their artifacts when first referenced
-    Seq(Recommend, Similarity, IoOps, Dedup, TextOps, Graph, Probes): Unit
+    // the modules declare their artifacts when first referenced
+    Seq(Recommend, Similarity, IoOps, Dedup, TextOps, Graph, Probes, graft.Tables): Unit
     Memo.registry.asScala.toSeq.map(_.asInstanceOf[Artifact[Any]])
   }
   private def named(name: String) = all.find(_.name == name).get
@@ -23,9 +23,9 @@ class MemoSpec extends AnyFunSuite {
     finally saved.foreach { case (a, snap) => a.m.clear(); a.m ++= snap }
   }
 
-  test("the ops modules declare 20 artifacts under distinct names") {
+  test("the modules declare 22 artifacts under distinct names") {
     val names = all.map(_.name)
-    assert(names.size == 20 && names.distinct == names)
+    assert(names.size == 22 && names.distinct == names)
   }
 
   test("a build runs once per (app, dataset, sub-key) and the ledger names it") {
