@@ -1,25 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregate (TopKAgg/MinHashAgg/MisraGriesAgg)
-      // runs in ObjectHashAggregate, which falls back to SORT-based
-      // aggregation after 128 groups by default — that re-sorts the
-      // whole fan-out the heap aggregates exist to avoid. The buffers
-      // are tiny (k entries each); let the hash path keep them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR (not WARN): the driver parses the tail of the run log, so
-    // every stray warning between the result line and EOF risks pushing
-    // the JSON out of the captured window.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // untimed warmup: JIT + parquet footer caches, so per-query numbers
     // measure the query, not JVM startup. A micro-ALS fit warms the
     // MLlib code paths the same way q06 warms scan/agg codegen.
@@ -253,7 +236,7 @@ object Bench {
     def execJ(keys: Iterable[String]): String = keys.flatMap { k =>
       shortExecMap.get(k).map(v => "\"" + k + "\":[" + v.mkString(",") + "]")
     }.mkString("{", ",", "}")
-    // task slots as the session resolved them (SPARK_GRAFT_CPUS may be *)
+    // task slots as the session resolved them (-Dspark.master may differ)
     val slots = spark.sparkContext.defaultParallelism
     val fullJson = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""cpus":$slots,"runs":2,"n_queries":${results.size},"total_mean":$totalMean,""" +

@@ -1,22 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Time a single query with the Bench harness settings (3 runs). */
+/** Time a single query with the Bench harness settings (3 runs). A
+  * setting is varied with a `-Dspark.*` flag (see [[Session]]). */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // opt-in A/B knob for the Iterate.pin partition-sizing conf
-    sys.env.get("SPARK_GRAFT_PIN_BYTES")
-      .foreach(v => spark.conf.set("spark.graft.pinPartitionBytes", v))
+    val spark = Session.local()
     // opt-in per-job attribution: wall, stage and task count per job,
     // so a slow key decomposes into few-big-jobs (data) vs
     // many-small-jobs (scheduling/materialization floor)

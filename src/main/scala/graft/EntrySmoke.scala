@@ -4,12 +4,7 @@ package graft
   * rows — the same check the round driver runs. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val n = SparkEntry.entry(spark).count()
     println(s"""{"entry_rows":$n,"ok":${n > 0}}""")
     spark.stop()

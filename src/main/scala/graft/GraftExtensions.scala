@@ -6,13 +6,17 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.CosineSimilarity
 
-/** Session-extension injector: registers the engine's native functions
-  * at session build time, so SQL users get them without touching the
-  * Scala API:
+/** Session-extension injector: registers the engine's native functions,
+  * both planner strategies and the SimplifySelfCosine rule at session
+  * build time, so SQL users get them without touching the Scala API.
+  * [[Session.local]] builds with it; a cluster session sets it next to
+  * the rest of that factory's table:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * spark-submit \
+  *   --conf spark.sql.extensions=graft.GraftExtensions \
+  *   --conf spark.sql.session.timeZone=UTC \
+  *   --conf spark.sql.objectHashAggregate.sortBased.fallbackThreshold=4194304 \
   *   ...
   * }}}
   */

@@ -22,13 +22,7 @@ object PlanDump {
       "usage: PlanDump [sfDir] | PlanDump <sfDir> <outDir> <tag> key...")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val keys = args.drop(3).toSeq.map(SparkEntry.resolveKey)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     if (keys.isEmpty) writePlansMd(spark, d)
     else {
       val (out, tag) = (args(1), args(2))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming micro-batch DIAGNOSTIC (round 13): runs the named gate
   * keys with a StreamingQueryListener attached and prints every
   * micro-batch's durationMs breakdown (addBatch / getBatch /
@@ -11,24 +9,14 @@ import org.apache.spark.sql.SparkSession
   * decomposes a slow batch into plan/exec/state/commit so the fix
   * targets the real term. Usage:
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.StreamDiag e44 e20"
+  * Stream partitions and the state-store provider are `-D` flags:
+  * `spark.graft.streamShufflePartitions`,
+  * `spark.sql.streaming.stateStore.providerClass` (see [[Session]]).
   */
 object StreamDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // opt-in A/B knobs: state-store provider + stream partition override
-    sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach(p =>
-      spark.conf.set("spark.graft.streamStateStoreProvider", p))
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").foreach(p =>
-      spark.conf.set("spark.graft.streamShufflePartitions", p))
+    val spark = Session.local()
     val lst = new org.apache.spark.sql.streaming.StreamingQueryListener {
       override def onQueryStarted(
           e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()

@@ -45,7 +45,7 @@ object Tables {
     * TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Adapt on the read
     * schema so every downstream op always sees a session-local
     * TimestampType `ts` — the session timezone is pinned to UTC
-    * everywhere (Bench/Verify/specs), so the NTZ→LTZ cast is
+    * by graft.Session, so the NTZ→LTZ cast is
     * value-preserving and matches DuckDB's naive-timestamp reading. */
   def events(s: SparkSession, d: String): DataFrame = {
     // The NTZ→LTZ cast below is value-preserving ONLY under a UTC
@@ -54,7 +54,7 @@ object Tables {
     // doesn't, instead of silently shifting every event timestamp.
     require(s.conf.get("spark.sql.session.timeZone", "") == "UTC",
       "graft.Tables.events requires spark.sql.session.timeZone=UTC " +
-        "(set it in the SparkSession builder); read TESTDATA.md")
+        "(graft.Session sets it); read TESTDATA.md")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = read(s, d, "events")
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}

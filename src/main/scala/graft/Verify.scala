@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,24 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregate (TopKAgg/MinHashAgg/MisraGriesAgg)
-      // runs in ObjectHashAggregate, which falls back to SORT-based
-      // aggregation after 128 groups by default — that re-sorts the
-      // whole fan-out the heap aggregates exist to avoid. The buffers
-      // are tiny (k entries each); let the hash path keep them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver captures only the last ~2000 bytes of
-    // the run log, and the FINAL stdout line of this main is the
-    // per-column value echo for the gate's red keys — a stray shutdown
-    // warning between that line and EOF would push it out of the window.
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session logs at ERROR: the FINAL stdout line of this main is
+    // the per-column value echo for the gate's red keys
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Local-iteration escape hatch: SPARK_GRAFT_ONLY=d09,t06 runs a
     // subset. The driver never sets it, so its runs stay exhaustive.

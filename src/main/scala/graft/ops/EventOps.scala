@@ -210,25 +210,7 @@ object EventOps {
         }
       }.getOrElse(n)
     s.conf.set("spark.sql.shuffle.partitions", eff.toString)
-    // Optional state-store provider override (round 14, VERDICT r13
-    // #5): spark.graft.streamStateStoreProvider, scoped to the gated
-    // stream exactly like the partition override; default unchanged
-    // (HDFSBackedStateStoreProvider). Measured on these bounded gates
-    // the RocksDB provider was a wash-to-loss (its per-partition
-    // native-instance setup outweighs the already-small delta-commit
-    // chains at 2 partitions), but a deployment with large per-batch
-    // state sets it here without touching query code.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.getOption(provKey)
-    val overProv = s.conf.getOption("spark.graft.streamStateStoreProvider")
-    overProv.foreach(p => s.conf.set(provKey, p))
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      if (overProv.isDefined) prevProv match {
-        case Some(p) => s.conf.set(provKey, p)
-        case None => s.conf.unset(provKey)
-      }
-    }
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Run a BOUNDED streaming write under Trigger.AvailableNow (round

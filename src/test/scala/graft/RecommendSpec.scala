@@ -85,17 +85,20 @@ class RecommendSpec extends SparkSpec {
   }
 
   test("r06 ALS recs: 5 per user, unseen only, gates all true") {
-    val recs = ops.Recommend.alsTop5(spark, sf).cache()
+    // the memoized artifact, already persisted: read it, never
+    // cache or unpersist it under the memo's other consumers
+    val recs = ops.Recommend.alsTop5(spark, sf)
     val perUser = recs.groupBy("user_id").count().collect()
     assert(perUser.forall(_.getAs[Long]("count") <= 5))
     val seen = etl.Ratings.implicitRatings(spark, sf).select("user_id", "item_id")
     assert(recs.join(seen, Seq("user_id", "item_id"), "left_semi").count() == 0)
-    recs.unpersist()
     val gates = ops.Recommend.r06(spark, sf).collect().head
     assert(gates.getAs[Long]("n_users") > 0)
     assert(gates.getAs[Boolean]("coverage_ok"))
     assert(gates.getAs[Boolean]("sorted_ok"))
     assert(gates.getAs[Boolean]("unseen_ok"))
+    assert(recs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the shared als_top5 artifact was unpersisted")
   }
 
   test("the public api.Recommend.alsTopK serves exactly the gated alsTop5 rows") {

@@ -12,22 +12,11 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // TypedImperativeAggregate (TopKAgg/MinHashAgg/MisraGriesAgg)
-      // runs in ObjectHashAggregate, which falls back to SORT-based
-      // aggregation after 128 groups by default — that re-sorts the
-      // whole fan-out the heap aggregates exist to avoid. The buffers
-      // are tiny (k entries each); let the hash path keep them.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4194304")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)   // bucketed-table tests
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
-      .getOrCreate()
+    val s = Session.local(cpus = 4, extra = Seq(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" -> wh,   // bucketed-table tests
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$wh/metastore_db;create=true"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
