@@ -16,7 +16,7 @@ object D11Slope {
   def main(args: Array[String]): Unit = {
     val spark = Session.local()
     args.foreach { d =>
-      val cand = ops.Dedup.d11Cand(spark, d).localCheckpoint()
+      val cand = ops.Pin.cut(ops.Dedup.d11Cand(spark, d))
       val raw = cand.count()
       val distinctPairs = cand.distinct().count()
       val verified = cand.distinct()

@@ -12,9 +12,10 @@ import java.nio.file.{Files, Paths}
   *    before/after plan evidence. A key may be a prefix matching
   *    exactly one query (see [[SparkEntry.resolveKey]]).
   * Keys whose construction executes eagerly (streaming harnesses,
-  * checkpoint-pinned iterative ops) show the plan of their
-  * materialized RESULT — the upstream plan for those is audited via
-  * their OpsSpec plan pins instead. Run:
+  * `Pin.cut` sites) show the plan of their materialized RESULT — the
+  * upstream plan for those is audited via their OpsSpec plan pins
+  * instead. Both forms print [[canonical]] plans, so two dumps of one
+  * tree diff clean. Run:
   * `sbt "runMain graft.PlanDump /root/testdata/sf0.01"` */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -36,9 +37,24 @@ object PlanDump {
   }
 
   private def plan(spark: SparkSession, d: String, name: String): String =
-    try SparkEntry.queries(name)(spark, d).queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    try canonical(SparkEntry.queries(name)(spark, d).queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     catch { case e: Throwable => s"(plan dump failed: ${e.getMessage})\n" }
+
+  /** Run-scoped numbers, each renumbered per plan in order of first
+    * appearance: expression ids (`#n`), exchange `plan_id`s, RDD ids,
+    * whole-stage-codegen ids and the random suffix of a temp dir. All
+    * are session counters, so without this the same plan prints
+    * differently depending on what ran before it. */
+  private val runScoped = Seq("(#)(\\d+)", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)",
+    "(codegen id : )(\\d+)", "(/graft_[A-Za-z0-9]+_)(\\d{6,})").map(_.r)
+
+  private[graft] def canonical(plan: String): String =
+    runScoped.foldLeft(plan) { (p, re) =>
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(p, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
 
   private def writePlansMd(spark: SparkSession, d: String): Unit = {
     val plans = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> plan(spark, d, n))
@@ -66,8 +82,10 @@ object PlanDump {
       "  x item blocks under MapPartitions GEMM, block-bounded)\n"
     else s"  !! UNSANCTIONED: ${rogue.mkString(", ")} — audit before shipping\n")
     sb ++= "- Keys whose construction executes eagerly (streaming harnesses,\n"
-    sb ++= "  checkpoint-pinned iterative ops) show the plan of their\n"
-    sb ++= "  materialized RESULT; their upstream plans are pinned in specs.\n"
+    sb ++= "  Pin.cut sites) show the plan of their materialized RESULT;\n"
+    sb ++= "  their upstream plans are pinned in specs.\n"
+    sb ++= "- Expression, plan, RDD and codegen ids and temp-dir suffixes are\n"
+    sb ++= "  renumbered per plan in order of first appearance.\n"
     plans.foreach { case (name, p) =>
       sb ++= s"\n## $name\n\n```\n"
       sb ++= p

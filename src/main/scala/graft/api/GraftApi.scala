@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Hashing, TextNorm, VectorOps}
+import graft.ops.Pin
 
 /** The schema-parameterized public surface of the engine.
   *
@@ -370,7 +371,7 @@ object Ann {
       .withColumn("nbr", (col("node") + col("off")) % n)
       .select("node", "nbr").distinct()
     def pin(g: DataFrame): DataFrame =
-      if (checkpointRounds) g.localCheckpoint() else g
+      if (checkpointRounds) Pin.cut(g) else g
     def refine(g: DataFrame): DataFrame = {
       val b = pin(g.select("node", "nbr")
         .union(g.select(col("nbr").as("node"), col("node").as("nbr")))
@@ -430,11 +431,11 @@ object Ann {
     * artifact the descent consumes. c = (__nid, __cv). */
   private[graft] def l1StratumGraph(c: DataFrame, l1Mod: Int,
       degree: Int): DataFrame = {
-    val l1 = c.filter(col("__nid") % l1Mod === 0).localCheckpoint()
+    val l1 = Pin.cut(c.filter(col("__nid") % l1Mod === 0))
     val dmap = l1.select(col("__nid"))
       .withColumn("__did",
         row_number().over(Window.orderBy("__nid")).cast("long") - 1)
-      .localCheckpoint() // stratum-sized global window, bounded
+      .transform(Pin.cut) // stratum-sized global window, bounded
     knnGraph(
         l1.join(dmap, "__nid")
           .select(col("__did").as("vec_id"), col("__cv").as("v")),
@@ -453,7 +454,7 @@ object Ann {
     val nL1 = c.filter(col("__nid") % l1Mod === 0).count()
     val nL2 = c.filter(col("__nid") % l2Mod === 0).count()
     val g1 = l1GraphOpt.getOrElse(
-      l1StratumGraph(c, l1Mod, degree).localCheckpoint())
+      Pin.cut(l1StratumGraph(c, l1Mod, degree)))
     def scored(cands: DataFrame): DataFrame = cands
       .join(c.select(col("__nid").as("cand"), col("__cv")), "cand")
       .join(q, "query_id")
@@ -462,14 +463,14 @@ object Ann {
     val top = c.filter(col("__nid") % l2Mod === 0)
       .select(col("__nid").as("cand"))
       .crossJoin(q.select("query_id"))
-    var visited = scored(top).localCheckpoint()
+    var visited = Pin.cut(scored(top))
     for (_ <- 1 to rounds) {
       val exp = descentTopN(visited, beam)
         .join(g1, col("cand") === col("node"))
         .select(col("query_id"), col("nbr").as("cand"))
         .distinct()
         .except(visited.select("query_id", "cand"))
-      visited = visited.unionByName(scored(exp)).localCheckpoint()
+      visited = Pin.cut(visited.unionByName(scored(exp)))
     }
     (visited, nL1, nL2)
   }
@@ -496,12 +497,12 @@ object Ann {
       beam: Int = 3, rounds: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     val c = corpus.select(col(id).as("__nid"), col(vec).as("__cv"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val q = queries.select(col(qId).as("query_id"), col(qVec).as("__qv"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val flat = knnGraph(c.select(col("__nid").as("vec_id"),
         col("__cv").as("v")), "vec_id", "v", degree, 2)
-      .select(col("node"), col("nbr")).localCheckpoint()
+      .select(col("node"), col("nbr")).transform(Pin.cut)
     val (visited, _, _) =
       layeredDescent(c, q, l1Mod, l2Mod, degree, beam, rounds)
     val entry = descentTopN(visited, beam)
@@ -561,7 +562,7 @@ object Graph {
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       .distinct()
-    e = graft.ops.Iterate.pin(e)
+    e = Pin.cut(e)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -583,7 +584,7 @@ object Graph {
         .select(greatest(col("n"), col("m")).as("a"),
           least(col("n"), col("m")).as("b"))
         .distinct()
-      val next = graft.ops.Iterate.pin(ss)
+      val next = Pin.cut(ss)
       converged = next.count() == e.count() &&
         next.exceptAll(e).count() == 0
       e = next
@@ -612,7 +613,7 @@ object Graph {
       iterations: Int = 5, dampingPct: Int = 85): DataFrame = {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct=$dampingPct out of [0, 100]")
-    val e = graft.ops.Iterate.pin(
+    val e = Pin.cut(
       edges.select(col(src).as("src"), col(dst).as("dst")))
     // a caller-supplied node frame exists to ADD isolated nodes, never
     // to subtract endpoints: a nodes frame missing an edge endpoint
@@ -631,7 +632,7 @@ object Graph {
     var cur = n1.join(deg, Seq("node"), "left")
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"), col("n"),
         expr(s"${SCALE}L div n").as("r"))
-    cur = graft.ops.Iterate.pin(cur)
+    cur = Pin.cut(cur)
     for (_ <- 1 to iterations) {
       val inc = cur.filter(col("deg") > 0)
         .join(e, cur("node") === e("src"))
@@ -646,7 +647,7 @@ object Graph {
           expr(s"($base * (${SCALE}L div n)) div 100 + " +
             s"($dampingPct * (coalesce(inc, 0L) + dang div n)) div 100")
             .as("r"))
-      cur = graft.ops.Iterate.pin(cur)
+      cur = Pin.cut(cur)
     }
     cur.select(col("node"), col("r").as("rank_fp"),
       round(col("r").cast("double") / SCALE.toDouble, 6).as("rank"))
@@ -744,7 +745,7 @@ object Events {
       min(when(col(event) === st, col(ts).cast("timestamp")))
         .as(colName(st)))
     val agg = df.groupBy(col(key)).agg(firsts.head, firsts.tail: _*)
-      .localCheckpoint() // one agg feeds |steps| prefix counts
+      .transform(Pin.cut) // one agg feeds |steps| prefix counts
     val spark = df.sparkSession
     import spark.implicits._
     val counts = steps.indices.map { k =>
@@ -767,7 +768,7 @@ object Events {
       dayOffset: Int = 1): DataFrame = {
     val days = df.select(col(key).as("__k"),
       to_date(col(ts).cast("timestamp")).as("__day")).distinct()
-      .localCheckpoint() // both sides of the self-join
+      .transform(Pin.cut) // both sides of the self-join
     val next = days.select(col("__k").as("__k2"), col("__day").as("__day2"))
     days.join(next, col("__k2") === col("__k") &&
         col("__day2") === date_add(col("__day"), dayOffset), "left")
@@ -807,7 +808,7 @@ object Curation {
   /** The shared funnel stages — one body so [[funnelSurvivors]] and
     * [[funnelCounts]] can never desynchronize (ApiSpec cross-asserts
     * their numbers). Returns (quality survivors, exact-dedup
-    * survivors, final survivors); `pin` localCheckpoints the stages
+    * survivors, final survivors); `pin` cuts (Pin.cut) the stages
     * that get counted AND consumed downstream. */
   private def funnelStages(df: DataFrame, id: String, text: String,
       minTokens: Int, maxStopRatio: Double, stopwords: Seq[String],
@@ -823,10 +824,10 @@ object Curation {
       .filter(col("__nt") >= minTokens &&
         col("__ns").cast("double") <= col("__nt") * maxStopRatio)
       .select(col(id), col(text))
-    val q = if (pin) q0.localCheckpoint() else q0
+    val q = if (pin) Pin.cut(q0) else q0
     val keep = Dedup.exactGroups(q, id, text).select(col("keep").as(id))
     val exact0 = q.join(keep, id)
-    val exact = if (pin) exact0.localCheckpoint() else exact0
+    val exact = if (pin) Pin.cut(exact0) else exact0
     val drops = Dedup.nearDuplicates(exact, id, text, jaccardThreshold)
       .select(col("b").as(id)).distinct()
     (q, exact, exact.join(drops, Seq(id), "left_anti"))
@@ -925,7 +926,7 @@ object Mix {
     val dom = df.groupBy(domain)
       .agg(count(lit(1)).as("n_rows"),
         sum(col(tokens).cast("long")).as("n_tokens"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = dom.agg(sum(col("n_tokens")).as("__tot_tok"))
     val w = dom.crossJoin(broadcast(tot))
       .withColumn("share_ppm", expr("cast((cast(n_tokens as decimal(38,0)) * 1000000) div __tot_tok as bigint)"))
@@ -983,7 +984,7 @@ object Mix {
       s"budgetPct=$budgetPct out of [0, 100]")
     val dom = df.groupBy(domain)
       .agg(sum(col(tokens).cast("long")).as("supply"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = dom.agg(sum(col("supply")).as("__tot"))
     val base = dom.crossJoin(broadcast(tot))
       .withColumn("pct", pctCol(domain, pctByDomain, defaultPct).cast("long"))
@@ -991,7 +992,7 @@ object Mix {
       .withColumn("alloc1",
         least(col("supply"), expr("cast((cast(budget as decimal(38,0)) * pct) div 100 as bigint)")))
       .withColumn("alloc", col("alloc1"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     // Fixpoint redistribution: per pass, the exact scalar state
     // (budget, Σalloc, unsaturated pct mass) is a 1-row agg on the
     // domain-grain frame; the pass adds each unsaturated domain's
@@ -1019,7 +1020,7 @@ object Mix {
           col("alloc") + when(col("alloc") < col("supply"),
             expr(s"cast((cast($leftover as decimal(38,0)) * pct) " +
               s"div $pctUnsat as bigint)")).otherwise(lit(0L))))
-          .localCheckpoint()
+          .transform(Pin.cut)
         // floor division can zero every share (leftover < pct mass):
         // nothing moved, the fixpoint is reached
         val nextGiven = Option(next.agg(sum(col("alloc"))).head().get(0))
@@ -1156,7 +1157,7 @@ object Search {
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
     val toks = TextNorm.tokens(col(text))
     val docs = df.select(col(id), toks.as("__toks"),
-      size(toks).cast("long").as("__dl")).localCheckpoint()
+      size(toks).cast("long").as("__dl")).transform(Pin.cut)
     val corpus = docs.agg(count(lit(1)).as("__n_docs"),
       sum(col("__dl")).as("__sum_dl"))
     val q = array(queryTerms.map(lit): _*)
@@ -1485,7 +1486,7 @@ object Patterns {
     // 2^k times. Pin it once when there is anything to share; the
     // single-variant path (q63/q70) keeps its lazy plan untouched.
     val runsShared =
-      if (variants.size > 1 || afterMatch != "all") runs.localCheckpoint()
+      if (variants.size > 1 || afterMatch != "all") Pin.cut(runs)
       else runs
     def variantDf(present: Seq[Int]): DataFrame = {
       val jOf = present.zipWithIndex.toMap // step index -> lead offset
@@ -1549,7 +1550,7 @@ object Patterns {
       // the ≤(m−1) lead()s rely on), so the per-key collect + fold is
       // the bounded-domain tier, never corpus-grain; the fold is one
       // codegen'd higher-order aggregate, not a driver loop.
-      val allPinned = all.localCheckpoint()
+      val allPinned = Pin.cut(all)
       val keptIv = allPinned
         .groupBy(kc: _*)
         .agg(collect_list(struct(col("match_id").as("f"),

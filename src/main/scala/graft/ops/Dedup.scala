@@ -314,12 +314,12 @@ object Dedup {
         .select(col("node"),
           least(col("label"), coalesce(col("cand"), col("label"))).as("label"),
           (col("cand").isNotNull && col("cand") < col("label")).as("chg"))
-      // Truncate lineage every 3 rounds (localCheckpoint persists its
+      // Truncate lineage every 3 rounds (a cut materializes its
       // result, so it doubles as the round's cache): without this the
       // plan deepens by one join per round, so a cache eviction — or a
       // >maxRounds-diameter graph at 100 TB edge volume — recomputes
       // the whole chain and the DAG itself grows quadratically to plan.
-      val next = if (rounds % 3 == 2) Iterate.pin(step) else step.cache()
+      val next = if (rounds % 3 == 2) Pin.cut(step) else step.cache()
       changed = next.filter(col("chg")).count()
       if (cached != null) cached.unpersist()
       cached = next
@@ -371,8 +371,7 @@ object Dedup {
     ccCache(s, d) {
       val edges = candidates(s, d) // (a, b), a < b — verified LSH pairs
         .cache()
-      val labels = connectedComponents(edges).cache()
-      labels.count() // materialize NOW — consumers must hit the cache
+      val labels = Pin.share(connectedComponents(edges))
       edges.unpersist()
       labels
     }
@@ -713,7 +712,7 @@ object Dedup {
   // distributed algorithms and one sequential SQL semantics agreeing
   // hash-exact is the strongest pin the operator family has.
   def d13(s: SparkSession, d: String): DataFrame =
-    // no edge cache: connectedComponentsStar localCheckpoints its own
+    // no edge cache: connectedComponentsStar cuts its own
     // filtered copy immediately and reads the input exactly once
     clusterRollup(connectedComponentsStar(candidates(s, d)))
 
@@ -860,7 +859,7 @@ object Dedup {
     val dropped = a.join(b, col("cell") === col("cell_b") && col("a") < col("b"))
       .filter(graft.functions.VectorOps.cosineSim(col("va"), col("vb")) >= 0.999)
       .select(col("b").as("vec_id")).distinct()
-      .localCheckpoint()
+      .transform(Pin.cut)
     aug.unpersist()
     dropped
   }
@@ -1093,7 +1092,7 @@ object Dedup {
             round(col("n_verified").cast("double") / col("n_candidates"), 4)
               .as("precision"))
       }
-      rowsOut.reduce(_.union(_)).orderBy("bands").localCheckpoint()
+      Pin.cut(rowsOut.reduce(_.union(_)).orderBy("bands"))
     } finally { sigs.unpersist(); sh.unpersist() }
   }
 
@@ -1233,20 +1232,14 @@ object Dedup {
     // nest (l3 ⊃ l2 ⊃ l1 ⊃ aug), so unpinned, the normalize+tokenize+
     // md5 pass over the corpus ran up to 4x per invocation — the
     // checkpoint bounds it to once per layer. Within-invocation only;
-    // every run still computes from the parquet inputs. Caveat at
-    // cluster scale: localCheckpoint is NOT fault-tolerant — an
-    // executor loss drops the only copy and fails the job — and the
-    // blocks release via ContextCleaner GC, not deterministically; a
-    // deployment that needs either guarantee points
-    // spark.graft.checkpointDir at shared storage (Iterate.pin) or
-    // swaps these for persist()+unpersist() at the end of the op.
+    // every run still computes from the parquet inputs.
     val l1 = tagged.filter(col("keep1")).select(col("doc_id"), col("text"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val l1b = l1
       .withColumn("bag_fp", md5(concat_ws(" ", sort_array(toks))))
       .withColumn("keep2", col("doc_id") === min(col("doc_id")).over(wBag))
     val l2 = l1b.filter(col("keep2")).select(col("doc_id"), col("text"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     // L3: verified near-dup pairs among L2 survivors
     val sh = l2
       .withColumn("toks", toks)
@@ -1412,7 +1405,7 @@ object Dedup {
     // verify sides) would otherwise each re-tokenize + re-hash the
     // corpus — the VERDICT-r5 recompute antipattern. At cluster scale
     // this is the persisted set index an AllPairs job writes first.
-    val sets = Iterate.pin(corpus(s, d)
+    val sets = Pin.cut(corpus(s, d)
       .withColumn("toks", graft.functions.TextNorm.tokens(col("text")))
       .filter(size(col("toks")) >= 3)
       .withColumn("sh", shingles(col("toks")))
@@ -1520,7 +1513,7 @@ object Dedup {
     // blocks by design; catching those takes a second phonetic/q-gram
     // blocking pass, which this operator does not claim.
     val sig = array_join(array_sort(split(col("p_name"), "")), "")
-    val all = base.unionByName(dups).withColumn("nsig", sig).localCheckpoint()
+    val all = Pin.cut(base.unionByName(dups).withColumn("nsig", sig))
     val a = all.select(col("p_partkey").as("ka"), col("p_name").as("na"),
       col("p_brand").as("brand"), col("p_type").as("ta"),
       col("p_size").as("size"), col("nsig"))
@@ -1598,14 +1591,14 @@ object Dedup {
       .withColumn("toks", graft.functions.TextNorm.tokens(col("text")))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), array_distinct(shingles(col("toks"))).as("sh"))
-      .localCheckpoint() // feeds the verify join twice + the total
+      .transform(Pin.cut) // feeds the verify join twice + the total
     val verified = candidates(s, d)
       .join(sh.select(col("doc_id").as("a"), col("sh").as("sha")), Seq("a"))
       .join(sh.select(col("doc_id").as("b"), col("sh").as("shb")), Seq("b"))
       .select(col("a"), col("b"),
         size(array_intersect(col("sha"), col("shb"))).as("inter"),
         size(array_union(col("sha"), col("shb"))).as("uni"))
-      .localCheckpoint() // candidate-sized; consumed by 10 bars twice
+      .transform(Pin.cut) // candidate-sized; consumed by 10 bars twice
     val bars = broadcast(s.range(10, 20).select((col("id") * 5).as("t")))
     val passing = verified.crossJoin(bars)
       .filter(col("inter") * 100 >= col("t") * col("uni"))

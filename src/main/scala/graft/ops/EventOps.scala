@@ -367,7 +367,7 @@ object EventOps {
     }.groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
-      .localCheckpoint()
+      .transform(Pin.cut)
 
   // e11: stream-static enrichment join — the stream picks up a
   // per-user segment from a (broadcast) batch dimension, then a batch
@@ -574,7 +574,7 @@ object EventOps {
         .select(unix_micros(col("window.start")).as("hour_us"),
           col("event_type"), col("n"))
         .orderBy("hour_us", "event_type")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -648,7 +648,7 @@ object EventOps {
       // _spark_metadata-aware read: only COMMITTED sink files count
       val result = s.read.parquet(out)
         .orderBy("doc_id")
-        .localCheckpoint() // pin rows so the finally can delete the dirs
+        .transform(Pin.cut) // pin rows so the finally can delete the dirs
       (result, run2Rows)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -799,7 +799,7 @@ object EventOps {
         s.table(sink)
           .withColumn("offsets_contiguous", lit(contiguous))
           .withColumn("exactly_once_ledger", lit(exactlyOnce))
-          .orderBy("part_key").localCheckpoint()
+          .orderBy("part_key").transform(Pin.cut)
       } finally {
         if (q.isActive) q.stop()
         s.catalog.dropTempView(sink)
@@ -898,7 +898,7 @@ object EventOps {
           count(col("c_ts")).as("n_pairs"),
           (count(lit(1)) - count(col("c_ts"))).as("n_lonely"))
         .orderBy("user_id")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1000,7 +1000,7 @@ object EventOps {
             lit(1))).as("n_lonely_purchases"),
           count(when(col("p_ts").isNull, lit(1))).as("n_lonely_clicks"))
         .orderBy("user_id")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1092,7 +1092,7 @@ object EventOps {
         .agg(count(lit(1)).cast("long").as("n_sessions"),
           sum("n_events").as("n_events"))
         .orderBy("user_id")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1254,7 +1254,7 @@ object EventOps {
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("lang")
-        .localCheckpoint()
+        .transform(Pin.cut)
       (out, nBatches)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1584,7 +1584,7 @@ object EventOps {
         .agg(max(when(col("rn") === 1, col("n"))).as("n_final"),
           count(lit(1)).as("n_emissions"))
         .orderBy("day", "event_type", "cohort")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dirP.toString), true)
@@ -1998,7 +1998,7 @@ object EventOps {
           round(sum(col("v")), 2).cast("double").as("sum_value"),
           countDistinct(col("batch_id")).as("n_batches"))
         .orderBy("event_type")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dirP.toString), true)
@@ -2065,7 +2065,7 @@ object EventOps {
             .as("sum_value"))
         .withColumn("n_after_run1", lit(afterRun1))
         .orderBy("event_type")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         s.sparkContext.hadoopConfiguration)
@@ -2188,7 +2188,7 @@ object EventOps {
         .select(unix_micros(col("window.start")).as("hour_us"),
           col("event_type"), col("n"))
         .orderBy("hour_us", "event_type")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -2311,7 +2311,7 @@ object EventOps {
       s.table(sink)
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "start_us")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -2415,7 +2415,7 @@ object EventOps {
         .select(unix_micros(col("day_w.start")).as("day_us"), col("event_type"),
           col("n_events"), col("n_hours"), col("peak_hour"))
         .orderBy("day_us", "event_type")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       s.catalog.dropTempView(sink)
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -2472,7 +2472,7 @@ object EventOps {
       .groupBy("seg", "event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy("seg", "event_type")
-      .localCheckpoint()
+      .transform(Pin.cut)
     finally s.catalog.dropTempView(sink)
   }
 
@@ -2514,7 +2514,7 @@ object EventOps {
       // session-grain (corpus-bounded by the gap rule) — materialize
       // once: it feeds the corpus-end agg, the life table AND the
       // risk-set total, which would otherwise each re-scan events
-      .localCheckpoint()
+      .transform(Pin.cut)
     // the corpus end is the max session end — no second events scan
     val endUs = sess.agg(max(col("lu")).as("end_us"))
     val labeled = sess.crossJoin(broadcast(endUs))
@@ -2605,7 +2605,7 @@ object EventOps {
         coalesce(max(when(col("ch") === "signup", 4)), lit(0))).as("mask"))
     // ≤8 rows; everything downstream (v twice, contrib twice) re-runs
     // its inputs — pin the corpus-sized stage to exactly one execution
-    val mc = j.groupBy("mask").agg(count(lit(1)).as("cnt")).localCheckpoint()
+    val mc = Pin.cut(j.groupBy("mask").agg(count(lit(1)).as("cnt")))
     val subsets = s.range(0, 8).select(col("id").cast("int").as("s"))
     val v = subsets.join(broadcast(mc),
         col("mask").bitwiseAND(col("s")) === col("mask"), "left")
@@ -2623,7 +2623,7 @@ object EventOps {
       .groupBy("channel")
       .agg(sum((when(col("pc").isin(0, 2), 2L).otherwise(1L)) *
         (col("vs1") - col("vs0"))).as("shapley_x6"))
-      .localCheckpoint() // 3 rows, consumed by itself + its total
+      .transform(Pin.cut) // 3 rows, consumed by itself + its total
     contrib
       .crossJoin(broadcast(contrib.agg(sum("shapley_x6").as("tot"))))
       .select(col("channel"), col("shapley_x6"),

@@ -83,7 +83,7 @@ object Graph {
     // oracle — is its correctness proof. The kernel keeps the
     // bounded-lineage discipline: each iteration reads the previous
     // state three times, so an unrolled plan grows 3^ITERS subtrees;
-    // Iterate.pin per round truncates it and one edge shuffle per
+    // Pin.cut per round truncates it and one edge shuffle per
     // iteration remains the honest Pregel cost.
     val nodes = Tables.customer(s, d).select(col("c_custkey").as("node"))
       .union(Tables.supplier(s, d)
@@ -212,14 +212,14 @@ object Graph {
 
   def g03(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Iterate.pin(edges(s, d))
-    var dist = Iterate.pin(Seq((BFS_SOURCE, 0)).toDF("node", "dist"))
+    val e = Pin.cut(edges(s, d))
+    var dist = Pin.cut(Seq((BFS_SOURCE, 0)).toDF("node", "dist"))
     for (_ <- 1 to BFS_ROUNDS) {
       dist = dist
         .union(dist.join(e, dist("node") === e("src"))
           .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
         .groupBy("node").agg(min("dist").as("dist"))
-      dist = Iterate.pin(dist)
+      dist = Pin.cut(dist)
     }
     dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")).orderBy("dist")
   }
@@ -273,14 +273,14 @@ object Graph {
 
   def g04(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Iterate.pin(weightedEdges(s, d))
-    var dist = Iterate.pin(Seq((SSSP_SOURCE, 0L)).toDF("node", "dist"))
+    val e = Pin.cut(weightedEdges(s, d))
+    var dist = Pin.cut(Seq((SSSP_SOURCE, 0L)).toDF("node", "dist"))
     for (_ <- 1 to SSSP_ROUNDS) {
       dist = dist
         .union(dist.join(e, dist("node") === e("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist")))
         .groupBy("node").agg(min("dist").as("dist"))
-      dist = Iterate.pin(dist)
+      dist = Pin.cut(dist)
     }
     dist.orderBy("dist", "node").limit(25)
   }
@@ -310,7 +310,7 @@ object Graph {
   // actually cascade (5 peel rounds at sf0.01 — measured; the full
   // graph is too dense to peel). Each round is one semi-join-restrict
   // + one degree aggregation — edge-partitioned shuffles, state =
-  // survivor node set, lineage pinned per round (Iterate.pin). The
+  // survivor node set, lineage pinned per round (Pin.cut). The
   // oracle runs the identical peel as a recursive CTE whose working
   // table carries the full survivor set per iteration, with the same
   // round cap — so round-for-round removal decisions must agree.
@@ -347,7 +347,7 @@ object Graph {
 
   private[graft] def kcoreNodes(s: SparkSession, d: String): DataFrame = {
     val edges = strongEdges(s, d).cache()
-    var surv = Iterate.pin(edges.select(col("src").as("node")).distinct())
+    var surv = Pin.cut(edges.select(col("src").as("node")).distinct())
     var n = surv.count()
     var rounds = 0
     var done = false
@@ -356,7 +356,7 @@ object Graph {
         .join(surv.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(surv.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .groupBy("src").agg(count(lit(1)).as("deg"))
-      val next = Iterate.pin(
+      val next = Pin.cut(
         deg.filter(col("deg") >= CORE_K).select(col("src").as("node")))
       val m = next.count()
       done = m == n // survivors only shrink: count equality = set equality
@@ -508,7 +508,7 @@ object Graph {
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
     lpaCache(s, d) {
       val edges = strongEdges(s, d).cache()
-      var lab = Iterate.pin(
+      var lab = Pin.cut(
         edges.select(col("src").as("node")).distinct()
           .select(col("node"), col("node").as("label")))
       (1 to LPA_ROUNDS).foreach { _ =>
@@ -521,7 +521,7 @@ object Graph {
           .agg(min((lit(LPA_CNT_CAP) - col("cnt")) * LPA_PACK + col("label"))
             .as("pack"))
           .select(col("node"), (col("pack") % LPA_PACK).as("label"))
-        lab = Iterate.pin(votes)
+        lab = Pin.cut(votes)
       }
       edges.unpersist()
       lab
@@ -699,7 +699,7 @@ object Graph {
   // the frontier node; work ∝ Σ deg(frontier), the Pregel cost —
   // walks never enumerate paths, state is one row per walk.
   def g10(s: SparkSession, d: String): DataFrame = {
-    val e = Iterate.pin(edges(s, d))
+    val e = Pin.cut(edges(s, d))
     var walks = e.select(col("src").as("walk_id")).distinct()
       .filter(col("walk_id") < 50)
       .select(col("walk_id"), col("walk_id").as("cur"))
@@ -762,19 +762,19 @@ object Graph {
   def g11(s: SparkSession, d: String): DataFrame = {
     val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
     val l = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-    val e = Iterate.pin(l.join(o, l("l_orderkey") === o("o_orderkey"))
+    val e = Pin.cut(l.join(o, l("l_orderkey") === o("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("sn")).distinct())
-    var hub = Iterate.pin(e.select(col("c")).distinct()
+    var hub = Pin.cut(e.select(col("c")).distinct()
       .withColumn("h", lit(HITS_SCALE)))
     var auth: DataFrame = null
     for (_ <- 1 to HITS_ROUNDS) {
       val araw = e.join(hub, Seq("c")).groupBy("sn").agg(sum(col("h")).as("ar"))
       val atot = araw.agg(sum(col("ar")).as("at"))
-      auth = Iterate.pin(araw.crossJoin(broadcast(atot))
+      auth = Pin.cut(araw.crossJoin(broadcast(atot))
         .select(col("sn"), expr(s"ar * ${HITS_SCALE}L div at").as("a")))
       val hraw = e.join(auth, Seq("sn")).groupBy("c").agg(sum(col("a")).as("hr"))
       val htot = hraw.agg(sum(col("hr")).as("ht"))
-      hub = Iterate.pin(hraw.crossJoin(broadcast(htot))
+      hub = Pin.cut(hraw.crossJoin(broadcast(htot))
         .select(col("c"), expr(s"hr * ${HITS_SCALE}L div ht").as("h")))
     }
     auth.orderBy(col("a").desc, col("sn")).limit(20)
@@ -855,7 +855,7 @@ object Graph {
       |          UNION ALL SELECT j, i FROM co)""".stripMargin
 
   def g12(s: SparkSession, d: String): DataFrame = {
-    val e = Iterate.pin(coEdges(s, d))
+    val e = Pin.cut(coEdges(s, d))
     val cohortAdj = e.filter(col("src") < 200)
       .select(col("src").as("u"), col("dst").as("n1"))
     val deg = cohortAdj.groupBy("u").agg(count(lit(1)).as("deg"))
@@ -912,7 +912,7 @@ object Graph {
   // measured). Each round: one i<j-ordered triangle enumeration
   // (e1=(a,b) ⋈ e2=(b,c) ⋈ closure (a,c) — each triangle exactly
   // once), one unpivot-and-count keyed by edge, one filter; lineage
-  // pinned per round (Iterate.pin), survivor-count equality is the
+  // pinned per round (Pin.cut), survivor-count equality is the
   // fixpoint test (edge sets only shrink). Support is recomputed
   // over the FINAL set for the output, so the emitted numbers are
   // the truss's own supports whether the loop converged or hit the
@@ -952,12 +952,12 @@ object Graph {
   }
 
   def g13(s: SparkSession, d: String): DataFrame = {
-    var co = Iterate.pin(trussEdges(s, d))
+    var co = Pin.cut(trussEdges(s, d))
     var n = co.count()
     var rounds = 0
     var done = n == 0
     while (!done && rounds < TRUSS_ROUNDS) {
-      val kept = Iterate.pin(edgeSupport(co)
+      val kept = Pin.cut(edgeSupport(co)
         .filter(col("support") >= TRUSS_K - 2)
         .select("i", "j"))
       val m = kept.count()
@@ -1017,18 +1017,18 @@ object Graph {
   // reproduces the oracle's UNION set recursion.
   // Scale: each round is one frontier×edges shuffle keyed by node +
   // one (seed,node) agg; state is O(seeds × reached), lineage pinned
-  // per round (Iterate.pin). The d1/d2/d3 ring counts expose the
+  // per round (Pin.cut). The d1/d2/d3 ring counts expose the
   // expansion profile the centrality number summarizes.
   private val HC_SEEDS: Seq[Long] = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L)
   private val HC_ROUNDS = 3
 
   def g14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Iterate.pin(edges(s, d))
-    var dist = Iterate.pin(
+    val e = Pin.cut(edges(s, d))
+    var dist = Pin.cut(
       HC_SEEDS.map(x => (x, x, 0)).toDF("seed", "node", "dist"))
     for (_ <- 1 to HC_ROUNDS) {
-      dist = Iterate.pin(dist
+      dist = Pin.cut(dist
         .union(dist.join(e, dist("node") === e("src"))
           .select(col("seed"), col("dst").as("node"),
             (col("dist") + 1).as("dist")))
@@ -1081,7 +1081,7 @@ object Graph {
 
   def g15(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e = Iterate.pin(edges(s, d))
+    val e = Pin.cut(edges(s, d))
     def sampleHop(frontier: DataFrame, hop: Int, fanout: Int): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("seed", "src").orderBy(col("hk"), col("dst"))
@@ -1135,12 +1135,12 @@ object Graph {
   // and dangling mass returns to the seeds too. Same fixed-point
   // integer discipline as g01 (bigint 10^12 micro-units; every
   // per-round sum/div exact, bit-identical across engines and
-  // reduction orders), same bounded-lineage round loop (Iterate.pin
+  // reduction orders), same bounded-lineage round loop (Pin.cut
   // truncates the 3^k unrolled subtree), one edge shuffle per round.
   // Output: top-20 by (rank_fp DESC, node) with seed flags — seeds
   // dominate but mass measurably diffuses to their neighborhoods.
   def g16(s: SparkSession, d: String): DataFrame = {
-    val e = Iterate.pin(edges(s, d))
+    val e = Pin.cut(edges(s, d))
     val nodes = Tables.customer(s, d).select(col("c_custkey").as("node"))
       .union(Tables.supplier(s, d)
         .select((col("s_suppkey") + SUPPLIER_OFFSET).as("node")))
@@ -1153,7 +1153,7 @@ object Graph {
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"),
         when(col("seed").isNotNull, 1L).otherwise(0L).as("is_seed"),
         when(col("seed").isNotNull, lit(SCALE / nS)).otherwise(lit(0L)).as("r"))
-    cur = Iterate.pin(cur)
+    cur = Pin.cut(cur)
     for (_ <- 1 to ITERS) {
       val inc = cur.filter(col("deg") > 0)
         .join(e, cur("node") === e("src"))
@@ -1168,7 +1168,7 @@ object Graph {
           expr(s"is_seed * ((15 * (${SCALE}L div $nS)) div 100) + " +
             s"($DAMP_NUM * (coalesce(inc, 0L) + is_seed * (dang div $nS))) div 100")
             .as("r"))
-      cur = Iterate.pin(cur)
+      cur = Pin.cut(cur)
     }
     cur.select(col("node"), col("is_seed"), col("r").as("rank_fp"),
         round(col("r").cast("double") / SCALE.toDouble, 6).as("rank"))
@@ -1311,18 +1311,18 @@ object Graph {
   private val DS_ROUNDS = 6
 
   def g18(s: SparkSession, d: String): DataFrame = {
-    val e = Iterate.pin(edges(s, d))
+    val e = Pin.cut(edges(s, d))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val seed = deg.orderBy(col("deg").desc, col("node")).limit(1)
       .select(col("node"))
     def sweep(from: DataFrame): DataFrame = {
-      var dist = Iterate.pin(from.select(col("node"), lit(0).as("dist")))
+      var dist = Pin.cut(from.select(col("node"), lit(0).as("dist")))
       for (_ <- 1 to DS_ROUNDS) {
         dist = dist
           .union(dist.join(e, dist("node") === e("src"))
             .select(col("dst").as("node"), (col("dist") + 1).as("dist")))
           .groupBy("node").agg(min("dist").as("dist"))
-        dist = Iterate.pin(dist)
+        dist = Pin.cut(dist)
       }
       dist
     }
@@ -1377,16 +1377,16 @@ object Graph {
   // so the whole gate is exact arithmetic in DECIMAL(38,0) (path
   // counts multiply combinatorially — bigint headroom is not enough
   // at 10× SF). Scale: 6+6+6 rounds of node-keyed shuffles with
-  // Iterate-pinned state (the g01/g03 discipline), state O(K·V),
+  // Pin.cut state (the g01/g03 discipline), state O(K·V),
   // never an all-pairs or per-pair materialization.
   private val STRESS_ROUNDS = 6
   private val STRESS_SOURCES = 4
 
   def g19(s: SparkSession, d: String): DataFrame = {
-    val e = Iterate.pin(edges(s, d))
+    val e = Pin.cut(edges(s, d))
     val wDeg = org.apache.spark.sql.expressions.Window
       .orderBy(col("deg").desc, col("src"))
-    val srcs = Iterate.pin(e.groupBy("src").agg(count(lit(1)).as("deg"))
+    val srcs = Pin.cut(e.groupBy("src").agg(count(lit(1)).as("deg"))
       .withColumn("rn", row_number().over(wDeg))
       .filter(col("rn") <= STRESS_SOURCES)
       .select(col("src").as("s")))
@@ -1398,13 +1398,13 @@ object Graph {
     // min-dist re-aggregation of the WHOLE dist table per round plus
     // a second sigma sweep — same values, half the pinned stages;
     // this was the repo's slowest bench line).
-    var frontier = Iterate.pin(srcs.select(col("s"), col("s").as("node"),
+    var frontier = Pin.cut(srcs.select(col("s"), col("s").as("node"),
       lit(0).as("dist"), lit(1L).cast("decimal(38,0)").as("sigma")))
     var visited = frontier
     for (l <- 1 to STRESS_ROUNDS) {
       val expanded = frontier.join(e, frontier("node") === e("src"))
         .select(frontier("s"), col("dst").as("node"), col("sigma"))
-      frontier = Iterate.pin(expanded
+      frontier = Pin.cut(expanded
         .join(visited.select("s", "node"), Seq("s", "node"), "left_anti")
         .groupBy("s", "node")
         .agg(sum("sigma").cast("decimal(38,0)").as("sigma"))
@@ -1414,13 +1414,13 @@ object Graph {
     val dist = visited.select("s", "node", "dist")
     val sigma = visited.select("s", "node", "sigma")
     // backward P: shortest-DAG continuation counts, deepest layer first
-    var pAcc = Iterate.pin(dist.filter(col("dist") === STRESS_ROUNDS)
+    var pAcc = Pin.cut(dist.filter(col("dist") === STRESS_ROUNDS)
       .select(col("s"), col("node"), lit(0L).cast("decimal(38,0)").as("p")))
     var pAll = pAcc
     for (l <- (0 until STRESS_ROUNDS).reverse) {
       val lv = dist.filter(col("dist") === l).select(col("s"), col("node"))
       val succ = pAcc.select(col("s").as("ps"), col("node").as("w"), col("p"))
-      pAcc = Iterate.pin(lv
+      pAcc = Pin.cut(lv
         .join(e, lv("node") === e("src"), "left")
         .join(succ, col("ps") === lv("s") && col("w") === col("dst"), "left")
         .groupBy(lv("s"), lv("node"))
@@ -1530,19 +1530,19 @@ object Graph {
   // SET, and the shrinking arena — 8 rounds is comfortably past this
   // graph's completion (trailing all-zero rounds keep the schema
   // SF-stable). Scale: each round is one edge-keyed join + one
-  // node-keyed max-agg + two anti-joins, state O(V), Iterate-pinned —
+  // node-keyed max-agg + two anti-joins, state O(V), cut per round —
   // the Pregel round shape; no node ever sees beyond its neighbors.
   private val MIS_ROUNDS = 8
 
   def g20(s: SparkSession, d: String): DataFrame = {
     def prio(n: Column): Column =
       Hashing.hash56(concat(lit("mis#"), n.cast("string")))
-    val e = Iterate.pin(edges(s, d))
-    var und = Iterate.pin(e.select(col("src").as("node")).distinct())
+    val e = Pin.cut(edges(s, d))
+    var und = Pin.cut(e.select(col("src").as("node")).distinct())
     var out: DataFrame = null
     for (r <- 1 to MIS_ROUNDS) {
       val nbr = und.select(col("node").as("nb"))
-      val winners = Iterate.pin(
+      val winners = Pin.cut(
         und.join(e, und("node") === e("src"), "left")
           .join(nbr, col("nb") === col("dst"), "left")
           .groupBy("node")
@@ -1551,7 +1551,7 @@ object Graph {
           .select("node"))
       val removed = winners.join(e, winners("node") === e("src"))
         .select(col("dst").as("node")).distinct()
-      und = Iterate.pin(und.join(winners, Seq("node"), "left_anti")
+      und = Pin.cut(und.join(winners, Seq("node"), "left_anti")
         .join(removed, Seq("node"), "left_anti"))
       val row = winners.agg(count(lit(1)).as("n_selected"),
           coalesce(sum(Hashing.hash56(col("node").cast("string"))
@@ -1638,12 +1638,12 @@ object Graph {
       .filter(col("a.l_partkey") =!= col("b.l_partkey"))
       .groupBy(col("a.l_partkey").as("i"), col("b.l_partkey").as("j"))
       .agg(count(lit(1)).as("cnt"))
-    val trP = Iterate.pin(tr)
-    val nodes0 = Iterate.pin(trP.groupBy("i").agg(sum("cnt").as("vol"))
+    val trP = Pin.cut(tr)
+    val nodes0 = Pin.cut(trP.groupBy("i").agg(sum("cnt").as("vol"))
       .withColumn("rn", row_number().over(
         Window.orderBy(col("vol").desc, col("i"))))
       .filter(col("rn") <= SCC_NODES).select(col("i").as("node")))
-    val sub = Iterate.pin(trP.filter(col("cnt") >= 2)
+    val sub = Pin.cut(trP.filter(col("cnt") >= 2)
       .join(nodes0.select(col("node").as("i")), Seq("i"))
       .join(nodes0.select(col("node").as("j")), Seq("j"))
       .select("i", "j").distinct())
@@ -1668,25 +1668,25 @@ object Graph {
     def trim(): Unit = {
       var go = true
       while (go) {
-        val e = Iterate.pin(liveEdges())
+        val e = Pin.cut(liveEdges())
         val alive = e.select(col("i").as("node")).distinct()
           .join(e.select(col("j").as("node")).distinct(), Seq("node"))
-        val dust = Iterate.pin(remaining.join(alive, Seq("node"), "left_anti"))
+        val dust = Pin.cut(remaining.join(alive, Seq("node"), "left_anti"))
         if (dust.isEmpty) go = false
         else {
-          labels = Iterate.pin(labels.union(
+          labels = Pin.cut(labels.union(
             dust.select(col("node"), col("node").as("scc_id"))))
-          remaining = Iterate.pin(remaining.join(dust, Seq("node"), "left_anti"))
+          remaining = Pin.cut(remaining.join(dust, Seq("node"), "left_anti"))
         }
       }
     }
 
     def minLabelFixpoint(e: DataFrame): DataFrame = {
       // e: (src, dst) in propagation direction
-      var lab = Iterate.pin(remaining.select(col("node"), col("node").as("l")))
+      var lab = Pin.cut(remaining.select(col("node"), col("node").as("l")))
       var changed = true
       while (changed) {
-        val nxt = Iterate.pin(lab
+        val nxt = Pin.cut(lab
           .union(lab.join(e, lab("node") === e("src"))
             .select(col("dst").as("node"), col("l")))
           .groupBy("node").agg(min("l").as("l")))
@@ -1699,15 +1699,15 @@ object Graph {
 
     trim()
     while (!remaining.isEmpty) {
-      val e = Iterate.pin(liveEdges())
+      val e = Pin.cut(liveEdges())
       val f = minLabelFixpoint(e.select(col("i").as("src"), col("j").as("dst")))
       val b = minLabelFixpoint(e.select(col("j").as("src"), col("i").as("dst")))
-      val settled = Iterate.pin(
+      val settled = Pin.cut(
         f.join(b.withColumnRenamed("l", "bl"), Seq("node"))
           .filter(col("l") === col("bl"))
           .select(col("node"), col("l").as("scc_id")))
-      labels = Iterate.pin(labels.union(settled))
-      remaining = Iterate.pin(
+      labels = Pin.cut(labels.union(settled))
+      remaining = Pin.cut(
         remaining.join(settled.select("node"), Seq("node"), "left_anti"))
       trim()
     }
@@ -1785,7 +1785,7 @@ object Graph {
       .filter(col("a.l_partkey") =!= col("b.l_partkey"))
       .select(col("a.l_partkey").as("i"), col("b.l_partkey").as("j"))
       .distinct()
-      .localCheckpoint() // feeds the reverse join + both degree aggs
+      .transform(Pin.cut) // feeds the reverse join + both degree aggs
   }
 
   def g22(s: SparkSession, d: String): DataFrame = {

@@ -246,10 +246,10 @@ object IoOps {
   def i32(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val n = e.count()
     val cut = n * 9 / 10
-    val base = e.filter(col("vec_id") < cut).localCheckpoint()
+    val base = Pin.cut(e.filter(col("vec_id") < cut))
     val arr = e.filter(col("vec_id") >= cut)
     // DETERMINISTIC per-(app, dataset) artifact path (ADVICE r12: a
     // fresh tmpDir per rebuild leaked the old artifact every time a
@@ -265,8 +265,8 @@ object IoOps {
       graphIndexWrite(base, fresh)
       fresh
     }
-    val g0 = Io.readParquet(s, s"$dir/graph0").localCheckpoint()
-    val g1 = Io.readParquet(s, s"$dir/graph1").localCheckpoint()
+    val g0 = Pin.cut(Io.readParquet(s, s"$dir/graph0"))
+    val g1 = Pin.cut(Io.readParquet(s, s"$dir/graph1"))
     val serve = Similarity.hnswServe(base, probeMax = 100, l1Mod = 50,
         l2Mod = 250, beam = 3, rounds = 2,
         flatGraph = Some(g0), l1Graph = Some(g1), compareFlat = false)
@@ -530,7 +530,7 @@ object IoOps {
           col("length").as("n_bytes"),
           md5(col("content")).as("content_md5"))
         .orderBy("doc_id")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -564,7 +564,7 @@ object IoOps {
       s.read.option("mergeSchema", "true")
         .parquet(dir + "/epoch1", dir + "/epoch2")
         .orderBy("doc_id")
-        .localCheckpoint() // pin rows so the finally can delete the dirs
+        .transform(Pin.cut) // pin rows so the finally can delete the dirs
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -618,7 +618,7 @@ object IoOps {
             .cast("double").as("sum_qty"))
         .select(col("n_rows"), col("sum_qty"),
           lit(after < before).as("compacted_ok"))
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -744,7 +744,7 @@ object IoOps {
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("lang", "source")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -816,7 +816,7 @@ object IoOps {
           .select(lit(v).as("version"), col("n_rows"), col("sum_keys"))
       val out = rollup(1).union(rollup(2)).union(rollup(3))
         .orderBy("version")
-        .localCheckpoint()
+        .transform(Pin.cut)
       (out, parquetFiles(s, s"$dir/data/add0").nonEmpty,
         add0.size + add1.size, add0.size)
     } finally {
@@ -873,7 +873,7 @@ object IoOps {
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").cast("long").as("sum_chars"))
         .orderBy("source")
-        .localCheckpoint()
+        .transform(Pin.cut)
       (out, planStr)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1184,7 +1184,7 @@ object IoOps {
           .agg(count(lit(1)).as("n_rows"),
             sum("o_orderkey").cast("long").as("sum_keys"))
           .select(lit(i + 1).as("version"), col("n_rows"), col("sum_keys"))
-      }.reduce(_.union(_)).orderBy("version").localCheckpoint()
+      }.reduce(_.union(_)).orderBy("version").transform(Pin.cut)
       (out, incFiles)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1282,7 +1282,7 @@ object IoOps {
       val out = step(1, snap(1), 0L, pub = true)
         .union(step(2, snap(version), violA, okA))
         .union(step(3, snap(version), violB, okB))
-        .orderBy("step").localCheckpoint()
+        .orderBy("step").transform(Pin.cut)
       (out, okA, okB, latest, parquetFiles(s, s"$dir/staging/b"))
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1360,7 +1360,7 @@ object IoOps {
           (col("n_name_tokens") === col("n_raw_names")).as("injective"),
           (col("n_leaks") === 0L).as("no_leak"), col("tok_checksum"))
         .orderBy("c_mktsegment")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -1436,7 +1436,7 @@ object IoOps {
             regexp_extract(col("_corrupt_record"), "\"c_custkey\":(\\d+)", 1))))
           .otherwise(lit(0L)).cast("decimal(38,0)")).cast("string")
           .as("deadletter_checksum"))
-        .localCheckpoint()
+        .transform(Pin.cut)
       parsed.unpersist()
       out
     } finally {
@@ -1511,7 +1511,7 @@ object IoOps {
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("files_pruned", lit(selected.length < nTotal))
         .orderBy("doc_id")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       sketch.unpersist()
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -1582,7 +1582,7 @@ object IoOps {
             col("ids_checksum") === col("c_c"))
         .select("lang", "n_docs", "sum_chars", "ids_checksum", "compact_ok")
         .orderBy("lang")
-        .localCheckpoint() // pin rows so the finally can delete the dirs
+        .transform(Pin.cut) // pin rows so the finally can delete the dirs
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         s.sparkContext.hadoopConfiguration)
@@ -1646,7 +1646,7 @@ object IoOps {
         .withColumn("zero_copy", lit(zeroCopy))
         .withColumn("src_advanced", lit(srcAdvanced))
         .orderBy("lang")
-        .localCheckpoint() // pin rows so the finally can delete the dirs
+        .transform(Pin.cut) // pin rows so the finally can delete the dirs
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         s.sparkContext.hadoopConfiguration)
@@ -1712,7 +1712,7 @@ object IoOps {
           sum("o_orderkey").cast("long").as("sum_keys"),
           round(sum(col("o_totalprice").cast("decimal(14,2)")), 2)
             .cast("double").as("sum_price"))
-        .orderBy("o_orderstatus").localCheckpoint()
+        .orderBy("o_orderstatus").transform(Pin.cut)
       (out, before, after)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -1770,7 +1770,7 @@ object IoOps {
           expr("aggregate(items.k, 0L, (acc, x) -> acc + x)").as("ksum"))
       val out = rb.groupBy("seg")
         .agg(count(lit(1)).as("n"), sum("ksum").as("sum_k"))
-        .orderBy("seg").localCheckpoint()
+        .orderBy("seg").transform(Pin.cut)
       (out, rb.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     } finally {
@@ -1891,7 +1891,7 @@ object IoOps {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
         .withColumn("files_pruned", lit(planned < metas.length))
         .orderBy("cat")
-      out.localCheckpoint()
+      Pin.cut(out)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         s.sparkContext.hadoopConfiguration)
@@ -1933,7 +1933,7 @@ object IoOps {
       year(col("o_orderdate")).as("yr"),
       (col("o_totalprice").cast("decimal(14,2)") * 100).cast("long")
         .as("cents"))
-      .localCheckpoint() // cutoff agg + base + delta share one scan
+      .transform(Pin.cut) // cutoff agg + base + delta share one scan
     val cutoff = o.agg(max(col("yr")).as("cut"))
     val withCut = o.crossJoin(broadcast(cutoff))
     def rollup(df: DataFrame): DataFrame =
@@ -1941,7 +1941,7 @@ object IoOps {
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("rev_cents"))
     val baseView = rollup(withCut.filter(col("yr") < col("cut")))
     val deltaAgg = rollup(withCut.filter(col("yr") >= col("cut")))
-      .localCheckpoint() // consumed by the merge AND the group count
+      .transform(Pin.cut) // consumed by the merge AND the group count
     val merged = baseView.as("b")
       .join(deltaAgg.as("dl"),
         col("b.prio") === col("dl.prio") && col("b.yr") === col("dl.yr"),

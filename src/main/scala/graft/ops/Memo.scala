@@ -13,8 +13,10 @@ import scala.collection.concurrent.TrieMap
   *   r05Cache(s, d) { build }               // one entry per (app, d)
   *   modelCache(s, d, s"it$iters") { fit }  // one per (app, d, sub-key)
   * }}}
-  * The build runs once per (applicationId, dataset, sub-key); its
-  * storage level and eager materialization stay in the closure.
+  * The build runs once per (applicationId, dataset, sub-key). A
+  * frame's build materializes itself eagerly through [[Pin]]:
+  * `Pin.share` for a frame several consumers read (persisted, lineage
+  * kept), `Pin.cut` for one whose lineage must not be replayed.
   *
   * Eviction has one rule: every lookup drops the entries of every
   * OTHER applicationId from every declared artifact. Spark allows one
@@ -58,7 +60,7 @@ object Memo {
   }
 
   /** Drop every memoized artifact reference. Callers should follow
-    * with `spark.catalog.clearCache()` (for .cache()d frames) and let
+    * with `spark.catalog.clearCache()` (for `Pin.share`d frames) and let
     * the ContextCleaner collect the now-unreferenced checkpoint RDDs. */
   def clearAll(): Unit = registry.forEach(_.m.clear())
 }

@@ -814,8 +814,8 @@ object Multimodal {
       .select(col("doc_id"), col("chunk_no"),
         Hashing.hash56(col("ctext")).as("ch"),
         length(encode(col("ctext"), "UTF-8")).cast("long").as("blen"))
-    val chunksP = graft.ops.Iterate.pin(assemble("cno"))
-    val fixedP = graft.ops.Iterate.pin(assemble("fno"))
+    val chunksP = Pin.cut(assemble("cno"))
+    val fixedP = Pin.cut(assemble("fno"))
     val tot = chunksP.agg(count(lit(1)).as("n_chunks"),
       sum(col("blen")).as("bytes_total"),
       count_distinct(col("ch")).as("n_distinct"))
@@ -984,7 +984,7 @@ object Multimodal {
       // ~1 s single-stage jobs per run at sf0.1). The checkpoint pins
       // the 4-column fold output; the sample + sort then run over
       // narrow materialized rows. Distributed and linear at any scale.
-      .localCheckpoint()
+      .transform(Pin.cut)
       .orderBy("doc_id")
   }
 

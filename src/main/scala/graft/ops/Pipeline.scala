@@ -189,7 +189,7 @@ object Pipeline {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("sum_ids"))
         .orderBy("lang")
-        .localCheckpoint()
+        .transform(Pin.cut)
       (out, crossWaveDrops)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
@@ -651,7 +651,7 @@ object Pipeline {
         .select(col("split"), col("n_docs"), col("n_clusters"),
           col("ids_checksum"), (col("n_straddling") === 0).as("no_straddle"))
         .orderBy("split")
-        .localCheckpoint()
+        .transform(Pin.cut)
     } finally {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
@@ -787,7 +787,7 @@ object Pipeline {
     // more corpus scans (the plan audit showed 3 parquet passes here)
     val dom = docs.groupBy("domain")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = dom.agg(sum(col("n_tok")).as("tot_tok"))
     val w = dom.crossJoin(broadcast(tot))
       .withColumn("share_ppm", expr("(1000000 * n_tok) div tot_tok"))
@@ -838,7 +838,7 @@ object Pipeline {
   // unsaturated domains, again capped. All integer div arithmetic —
   // the floor slack is bounded by the divisor count and pinned.
   // Scale: ONE corpus pass builds the 4-row supply rollup
-  // (localCheckpoint-pinned, the p09 rule); both rounds are 4-row ×
+  // (Pin.cut, the p09 rule); both rounds are 4-row ×
   // 1-row-broadcast math — the allocation algebra never touches the
   // corpus again.
   def p10(s: SparkSession, d: String): DataFrame = {
@@ -848,7 +848,7 @@ object Pipeline {
         .as("domain"),
       size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
     val dom = docs.groupBy("domain").agg(sum(col("n_tok")).as("supply"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = dom.agg(sum(col("supply")).as("tot"))
     val pct = when(col("domain") === "dom0", 50L)
       .when(col("domain") === "dom1", 25L)
@@ -994,7 +994,7 @@ object Pipeline {
   // dom0's target (125% of corpus) provably exceeds its 4-epoch
   // ceiling, so the cap and the redistribution both bind.
   // Scale: ONE corpus pass builds the 4-row supply rollup
-  // (localCheckpoint-pinned); the allocation algebra is 4-row ×
+  // (Pin.cut); the allocation algebra is 4-row ×
   // 1-row-broadcast math.
   def p12(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(
@@ -1003,7 +1003,7 @@ object Pipeline {
         .as("domain"),
       size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
     val dom = docs.groupBy("domain").agg(sum(col("n_tok")).as("supply"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = dom.agg(sum(col("supply")).as("tot"))
     val pct = when(col("domain") === "dom0", 50L)
       .when(col("domain") === "dom1", 25L)
@@ -1092,7 +1092,7 @@ object Pipeline {
   // point) except the one exp per domain, rounded at micro on a
   // 4-row table — see the in-body note for the round-7 tie math.
   // Scale: ONE corpus
-  // scan → the (domain,word) cell table (localCheckpoint-pinned;
+  // scan → the (domain,word) cell table (Pin.cut;
   // corpus totals and domain totals re-derive from IT, the r5-verdict
   // shared-artifact rule) → 4-row broadcast algebra.
   def p13(s: SparkSession, d: String): DataFrame = {
@@ -1102,10 +1102,10 @@ object Pipeline {
         .as("domain"),
       explode(graft.functions.TextNorm.tokens(col("text"))).as("w"))
     val cells = docs.groupBy("domain", "w").agg(count(lit(1)).as("c_dw"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val corpus = cells.groupBy("w").agg(sum("c_dw").as("c_w"))
     val tots = cells.groupBy("domain").agg(sum("c_dw").as("t_d"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = tots.agg(sum("t_d").as("t"))
     // Engine parity (round-7 driver-gate lesson): the old contract
     // rounded THOUSANDS of per-cell ln terms at 6dp and summed — with
@@ -1321,7 +1321,7 @@ object Pipeline {
       .withColumn("cd_b", coalesce(sum(col("nd")).over(before), lit(0L)))
       .withColumn("ct_b", coalesce(sum(col("nt")).over(before), lit(0L)))
       .withColumn("cq_b", coalesce(sum(col("qs")).over(before), lit(0L)))
-      .localCheckpoint() // value-grain; joined against all 10 deciles
+      .transform(Pin.cut) // value-grain; joined against all 10 deciles
     val totals = broadcast(grain.agg(sum("nd").as("n_total"),
       sum("nt").as("t_total"), sum("qs").as("q_total")))
     val deciles = broadcast(s.range(0, 10).select(col("id").as("decile")))

@@ -164,7 +164,7 @@ object Probes {
   // the diverging column without any log-channel dependence.
   //
   // The parent result is MEMOIZED per (application, dataset) and
-  // materialized once (localCheckpoint): without the memo, four
+  // materialized once (Pin.cut): without the memo, four
   // sub-gates × two bench runs would re-execute the full r44/r49
   // pipelines eight extra times each (~35 s of pure duplication on
   // the driver bench). Registered in the shared Memo registry, so
@@ -175,7 +175,7 @@ object Probes {
   private def sub(parentKey: String,
       parent: (SparkSession, String) => DataFrame,
       cols: String*)(s: SparkSession, d: String): DataFrame =
-    parentCache(s, d, parentKey)(parent(s, d).localCheckpoint())
+    parentCache(s, d, parentKey)(Pin.cut(parent(s, d)))
       .select(cols.map(col): _*)
   private def subSql(parentSql: String, cols: String*): String =
     s"SELECT ${cols.mkString(", ")} FROM ($parentSql)"

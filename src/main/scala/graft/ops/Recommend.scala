@@ -4,7 +4,6 @@ import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 import graft.{Tables, api}
 import graft.etl.{Ratings, Split}
 import graft.functions.Hashing
@@ -162,19 +161,10 @@ object Recommend {
       val seen = hist.withColumnRenamed("item_id", "rec_item")
       val unseen = scored.join(seen, Seq("user_id", "rec_item"), "left_anti")
       val w = Window.partitionBy("user_id").orderBy(col("score").desc, col("rec_item"))
-      // top-10 cached: ranks 1-5 serve r05/r18/r19/r22, the 6-10 tail
+      // top-10 shared: ranks 1-5 serve r05/r18/r19/r22, the 6-10 tail
       // is r23's MMR candidate pool — one build, five consumers
-      // EXPLICIT MEMORY_AND_DISK (round-11, VERDICT r10 #2): Dataset
-      // .cache() already means this level, but the memoized serving
-      // artifacts carry the r9 ALS-factor rationale spelled out — a
-      // memory-evicted block must SPILL, not silently re-execute the
-      // whole co-occurrence lineage on every consumer (the r10 driver
-      // benched the evalRecs consumers at 11–21× with a warm memo).
-      val recs = unseen.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      recs.count() // materialize NOW — consumers must hit the cache
-      recs
+      Pin.share(unseen.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= 10))
     }
 
   def r05(s: SparkSession, d: String): DataFrame =
@@ -224,7 +214,7 @@ object Recommend {
                  else alsModel(s, d).userFactors
       base.select(col("id"),
           expr("transform(features, v -> CAST(v AS DOUBLE))").as("f"))
-        .localCheckpoint()
+        .transform(Pin.cut)
     }
 
   def alsModel(s: SparkSession, d: String): ALSModel =
@@ -271,10 +261,7 @@ object Recommend {
     alsTop5Cache(s, d) {
       val seen = Ratings.implicitRatings(s, d)
         .select(col("user_id").cast("int"), col("item_id").cast("int"))
-      val top5 = api.Recommend.serveTopK(alsModel(s, d), seen, k = 5, headroom = 15)
-        .persist(StorageLevel.MEMORY_AND_DISK) // spill, never re-execute
-      top5.count() // materialize NOW — consumers must hit the cache
-      top5
+      Pin.share(api.Recommend.serveTopK(alsModel(s, d), seen, k = 5, headroom = 15))
     }
 
   def r06(s: SparkSession, d: String): DataFrame = {
@@ -475,11 +462,7 @@ object Recommend {
         .select(col("l_orderkey").as("ok"), col("o_custkey").as("user_id"),
           col("l_partkey").as("item_id"))
         .distinct()
-      val oi = Split.tagTest(oiRaw, Seq("user_id", "item_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // spill, never re-execute
-      oi.count() // materialize NOW: the branches below read it (a lazy
-      // cache + early unpersist would recompute the join per branch)
-      oi
+      Pin.share(Split.tagTest(oiRaw, Seq("user_id", "item_id")))
     }
 
   /** The r12-protocol top-5 recs (user_id, rec_item, rank) from the
@@ -510,23 +493,17 @@ object Recommend {
       val scored = histTrain.join(co, histTrain("item_id") === co("i"))
         .groupBy(col("user_id"), col("j").as("rec_item"))
         .agg(sum(col("cnt")).as("score"))
-      val unseen = scored.join(
+      Pin.share(scored.join(
         histTrain.withColumnRenamed("item_id", "rec_item"),
-        Seq("user_id", "rec_item"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK) // spill, never re-execute
-      unseen.count() // materialize NOW — consumers must hit the cache
-      unseen
+        Seq("user_id", "rec_item"), "left_anti"))
     }
 
   private def evalRecs(s: SparkSession, d: String): DataFrame =
     evalRecsCache(s, d) {
       val w = Window.partitionBy("user_id").orderBy(col("score").desc, col("rec_item"))
-      val recs = evalScores(s, d).withColumn("rank", row_number().over(w))
+      Pin.share(evalScores(s, d).withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
-        .select("user_id", "rec_item", "rank")
-        .persist(StorageLevel.MEMORY_AND_DISK) // spill, never re-execute
-      recs.count() // materialize NOW — consumers must hit the cache
-      recs
+        .select("user_id", "rec_item", "rank"))
     }
 
   /** The @5 evals' inputs: the memoized recs as (user_id, item_id,
@@ -659,10 +636,7 @@ object Recommend {
         .withColumn("rating",
           (lit(1.0f) + (col("user_id") % 7 + col("item_id") % 7)
             .cast("float") * lit(4.0f / 12.0f)))
-      val tagged = Split.tagTest(stars, Seq("user_id", "item_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK) // spill, never re-execute
-      tagged.count() // materialize NOW — consumers must hit the cache
-      tagged
+      Pin.share(Split.tagTest(stars, Seq("user_id", "item_id")))
     }
 
   /** An explicit-feedback ALS for the star split's `rows` train rows;
@@ -680,14 +654,11 @@ object Recommend {
       val nTrain = train.count()
       val model = starAls(nTrain).setRank(8).setMaxIter(10).setRegParam(0.05)
         .fit(train)
-      val eval = model.transform(tagged.filter(col("is_test"))).agg(
+      Pin.share(model.transform(tagged.filter(col("is_test"))).agg(
         lit(nTrain).as("n_train"),
         count(lit(1)).as("n_test"),
         round(sqrt(avg(pow(col("rating") - col("prediction"), 2))), 4).as("rmse"))
-        .withColumn("rmse_ok", col("rmse") > 0.0 && col("rmse") < 0.6)
-        .cache()
-      eval.count() // materialize the 1-row eval — consumers hit the cache
-      eval
+        .withColumn("rmse_ok", col("rmse") > 0.0 && col("rmse") < 0.6))
     }
 
   def r14(s: SparkSession, d: String): DataFrame =
@@ -1547,9 +1518,9 @@ object Recommend {
       // pin per step: `selected` feeds two joins this round and the
       // next round's anti-join — unpinned, the 5-step plan re-executes
       // every earlier step's joins multiplicatively
-      selected = selected.union(pick).localCheckpoint()
+      selected = Pin.cut(selected.union(pick))
     }
-    val out = selected.orderBy("user_id", "pos").localCheckpoint()
+    val out = Pin.cut(selected.orderBy("user_id", "pos"))
     cand.unpersist()
     simt.unpersist()
     out
@@ -1780,7 +1751,7 @@ object Recommend {
     // DISTINCT shuffle per consumer (per-job profile: five concurrent
     // 1–1.8 s two-stage jobs, one per subtree); one materialization
     // serves all five reads.
-    val ui = Iterate.pin(
+    val ui = Pin.cut(
       taggedInteractions(s, d).select("user_id", "item_id").distinct())
     val nItems = ui.groupBy(col("user_id").as("uid")).agg(count(lit(1)).as("n_items"))
     val co = ui.filter(col("user_id") < 30)
@@ -2912,21 +2883,21 @@ object Recommend {
     // shuffle only within one job, and the closers are separate
     // actions. `scores` itself stays unpinned (measured in r13:
     // materializing the wide user×candidate frame times 5% SLOWER).
-    val seq = Iterate.pin(o.withColumn("nxt", lead(col("o_orderkey"), 1).over(wAsc))
+    val seq = Pin.cut(o.withColumn("nxt", lead(col("o_orderkey"), 1).over(wAsc))
       .withColumn("rnd", row_number().over(wDesc)))
-    val li = Iterate.pin(Ratings.orderItems(s, d))
+    val li = Pin.cut(Ratings.orderItems(s, d))
     val trans = seq.filter(col("nxt").isNotNull && col("rnd") =!= 2)
       .join(li.as("a"), col("o_orderkey") === col("a.l_orderkey"))
       .join(li.as("b"), col("nxt") === col("b.l_orderkey"))
       .groupBy(col("a.l_partkey").as("i"), col("b.l_partkey").as("j"))
       .agg(count(lit(1)).as("cnt"))
-    val src = Iterate.pin(seq.filter(col("rnd") === 2)
+    val src = Pin.cut(seq.filter(col("rnd") === 2)
       .join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("user"), col("l_partkey").as("i")))
     val scores = src.join(trans, Seq("i"))
       .groupBy("user", "j").agg(sum(col("cnt")).as("score"))
     val wTop = Window.partitionBy("user").orderBy(col("score").desc, col("j"))
-    val top = Iterate.pin(scores.withColumn("rk", row_number().over(wTop))
+    val top = Pin.cut(scores.withColumn("rk", row_number().over(wTop))
       .filter(col("rk") <= 5))
     val tst = seq.filter(col("rnd") === 1)
       .join(li, col("o_orderkey") === col("l_orderkey"))
@@ -3075,7 +3046,7 @@ object Recommend {
     // (q66/q68's two-level discipline). Quintiles derive from ranks
     // via the standard ntile remainder arithmetic spelled out as
     // positive integer algebra identical on both engines.
-    val rfmP = rfm.localCheckpoint() // feeds 3 rank dims + the join
+    val rfmP = Pin.cut(rfm) // feeds 3 rank dims + the join
     def ranked(valueCol: String, bucketE: Column, desc: Boolean,
                out: String): DataFrame = {
       val base = rfmP.select(col("cust"), col(valueCol))
@@ -3202,7 +3173,7 @@ object Recommend {
     // pinned (round 14): oc feeds three subtrees (the cb distinct and
     // both sides of the same-basket self-join) — unpinned, each re-ran
     // the orders⋈orderItems build
-    val oc = Iterate.pin(oi.join(Tables.orders(s, d)
+    val oc = Pin.cut(oi.join(Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey").as("cust")),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_orderkey").as("ord"), col("cust"),
@@ -3327,7 +3298,7 @@ object Recommend {
     // of five fact scans (the round-5 redundant-recompute rule)
     val r = Ratings.implicitRatings(s, d)
       .select(col("user_id"), col("item_id"), col("rating").cast("long").as("r"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val top5 = r.groupBy("item_id").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("item_id")).limit(5)
       .select(col("item_id").as("i"))
@@ -3414,7 +3385,7 @@ object Recommend {
     // unpinned, each re-ran the ratings join+agg; and the anti-join
     // only ever matches panel users, so the pinned ~panel-sized frame
     // replaces a full-ratings build side there.
-    val panel = Iterate.pin(
+    val panel = Pin.cut(
       ratings.filter(col("uid") % 97 === 0 && col("uid") <= 15000))
     // per-user Gram contributions and rhs, one join + one agg
     val userCols = gram.map { case (i, j) =>
@@ -3562,7 +3533,7 @@ object Recommend {
     // cap covers the full part key range at every gate SF (partkey ≤
     // 20000 at sf0.1) so gated results are bit-identical.
     // Pinned (round 14) — same three-consumer reasoning as r48's.
-    val panel = Iterate.pin(
+    val panel = Pin.cut(
       ratings.filter(col("iid") % 89 === 0 && col("iid") <= 20000))
     // per-item Gram contributions and rhs, one join + one agg
     val itemCols = gram.map { case (i, j) =>
@@ -3673,7 +3644,7 @@ object Recommend {
       .select(col("user_id"), col("item_id"),
         (col("rating").cast("decimal(12,2)") * 1000000).cast("long").as("rm"),
         col("is_test"))
-      .localCheckpoint() // split feeds 5 subplans
+      .transform(Pin.cut) // split feeds 5 subplans
     val train = ratings.filter(!col("is_test"))
     val test = ratings.filter(col("is_test"))
     def floorDiv(num: Column, den: Column): Column =
@@ -3822,7 +3793,7 @@ object Recommend {
         .as("mi"),
       (col("o_totalprice").cast("decimal(14,2)") * 100).cast("long")
         .as("cents"))
-      .localCheckpoint() // feeds the cohort min AND the revenue grain
+      .transform(Pin.cut) // feeds the cohort min AND the revenue grain
     val cohorts = o.groupBy("o_custkey").agg(min(col("mi")).as("cohort_mi"))
     val sizes = cohorts.groupBy("cohort_mi")
       .agg(count(lit(1)).as("n_customers"))

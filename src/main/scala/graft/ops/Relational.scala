@@ -2016,7 +2016,7 @@ object Relational {
   // injection is pinned INSIDE the hash gate: bloom_injected is
   // derived from the optimized plan and the oracle pins TRUE — a conf
   // regression or a plan shape that stops qualifying flips the row
-  // red. Execution is forced by localCheckpoint while the confs are
+  // red. Execution is forced by Pin.cut while the confs are
   // still in place, so the EXECUTED plan carries the filter too.
   // Bloom passes are a superset of true matches (false positives only
   // cost shuffle bytes, never rows), so the gated rollup is exactly
@@ -2054,7 +2054,7 @@ object Relational {
             .cast("double").as("revenue"))
       val bloomed = agg.queryExecution.optimizedPlan.toString
         .contains("might_contain")
-      agg.localCheckpoint()
+      Pin.cut(agg)
         .withColumn("bloom_injected", lit(bloomed))
         .orderBy("o_year")
     } finally prev.foreach {
@@ -2113,7 +2113,7 @@ object Relational {
       .withColumn("moy", substring(col("month"), 6, 2))
       // nation×month grain; feeds both the seasonal-index agg and the
       // final join — one fact scan, not two
-      .localCheckpoint()
+      .transform(Pin.cut)
     val seasonal = detrended.filter(col("detr24").isNotNull)
       .groupBy("nation", "moy")
       .agg(sum(col("detr24")).as("seas_num"),
@@ -2265,7 +2265,7 @@ object Relational {
         col("o_custkey") === col("c_custkey"))
     val nationBm = facts.groupBy(col("c_nationkey").as("nation"))
       .agg(bitset(col("o_custkey"), nBits).as("bm"))
-      .localCheckpoint() // 25 rows; every level below re-merges these
+      .transform(Pin.cut) // 25 rows; every level below re-merges these
     val dim = broadcast(Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_regionkey")))
     val nationRows = nationBm
@@ -2328,7 +2328,7 @@ object Relational {
         col("c_nationkey") === col("n_nationkey"))
     val regionBm = facts.groupBy(col("n_regionkey").as("region"))
       .agg(bitset(col("o_custkey"), nBits).as("bm"))
-      .localCheckpoint() // 5 rows feed 10 pairs twice each
+      .transform(Pin.cut) // 5 rows feed 10 pairs twice each
     val sizes = regionBm.groupBy("region")
       .agg(bitsetMergeCount(col("bm")).as("n"))
     val withN = regionBm.join(sizes, Seq("region"))
@@ -2511,7 +2511,7 @@ object Relational {
         |SELECT depth, count(*) AS n_paths,
         |  sum(node) AS sum_node, sum(a) AS sum_anc
         |FROM anc GROUP BY depth ORDER BY depth""".stripMargin)
-      .localCheckpoint()
+      .transform(Pin.cut)
     finally s.catalog.dropTempView("graft_q67_part")
   }
 
@@ -2558,7 +2558,7 @@ object Relational {
       .withColumn("cin", sum(col("cnt")).over(within))
       .join(broadcast(offsets), Seq("bucket"))
       .select(col("v"), (col("off") + col("cin")).as("cle"))
-      .localCheckpoint() // value grain; 16 boundary picks + the total
+      .transform(Pin.cut) // value grain; 16 boundary picks + the total
     val totals = broadcast(cdf.agg(max(col("cle")).as("n_total"),
       min(col("v")).as("v_min")))
     val ks = broadcast(s.range(1, 17).select(col("id").as("k")))
@@ -2624,7 +2624,7 @@ object Relational {
         col("o_custkey") === col("c_custkey"))
     val nationBm = facts.groupBy(col("c_nationkey").as("nation"))
       .agg(sparseBitmap(col("sid")).as("bm"))
-      .localCheckpoint() // 25 rows; every level below re-merges these
+      .transform(Pin.cut) // 25 rows; every level below re-merges these
     val dim = broadcast(Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_regionkey")))
     val nationRows = nationBm
@@ -2920,7 +2920,7 @@ object Relational {
     * frame — RelationalSpec feeds a planted linear+seasonal series and
     * pins the h-step values exactly. */
   private[graft] def holtForecast(monthly0: DataFrame, hMax: Int): DataFrame = {
-    val monthly = monthly0.localCheckpoint() // grain frame feeds fit + seasonal
+    val monthly = Pin.cut(monthly0) // grain frame feeds fit + seasonal
     val (_, fit, seasonal) = holtParts(monthly)
     fit
       .withColumn("h", explode(expr(s"sequence(1L, ${hMax}L)")))
@@ -3049,7 +3049,7 @@ object Relational {
   // month-grain frame; everything downstream is nation×h rows.
   private[graft] def holtForecastIntervals(monthly0: DataFrame,
       hMax: Int): DataFrame = {
-    val monthly = monthly0.localCheckpoint()
+    val monthly = Pin.cut(monthly0)
     val (withT, fit, seasonal) = holtParts(monthly)
     val resid = withT
       .withColumn("moy", substring(col("month"), 6, 2))

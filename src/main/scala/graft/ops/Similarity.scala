@@ -1025,11 +1025,7 @@ object Similarity {
   private val s09Cache = Memo.artifact[DataFrame]("s09_gate")
 
   def s09(s: SparkSession, d: String): DataFrame =
-    s09Cache(s, d) {
-      val gate = s09Uncached(s, d).cache()
-      gate.count()
-      gate
-    }
+    s09Cache(s, d)(Pin.share(s09Uncached(s, d)))
 
   private def s09Uncached(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1396,7 +1392,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents2 = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val assigned = nearestCell(e, cents2).localCheckpoint()
+    val assigned = Pin.cut(nearestCell(e, cents2))
     val probes = assigned.filter(col("vec_id") < 100)
       .select(col("vec_id").as("query_id"), col("v").as("va"))
     // per query, every cell ranked by distance (the probe order)
@@ -1405,7 +1401,7 @@ object Similarity {
       .withColumn("d2", sqd(col("va"), col("cv")))
       .withColumn("crank", row_number().over(wC))
       .select("query_id", "va", "cent_id", "crank")
-      .localCheckpoint()
+      .transform(Pin.cut)
     // exact reference: brute-force top-3 on the panel (4dp discipline)
     val wE = Window.partitionBy("query_id").orderBy(col("cos").desc, col("nn_id"))
     val exact = probes.join(e.select(col("vec_id").as("nn_id"), col("v").as("vb")))
@@ -1414,7 +1410,7 @@ object Similarity {
       .withColumn("rank", row_number().over(wE))
       .filter(col("rank") <= 3)
       .select("query_id", "nn_id")
-      .localCheckpoint()
+      .transform(Pin.cut)
     val cand = assigned.select(col("vec_id").as("nn_id"),
       col("cell").as("cent_id"), col("v").as("vb"))
     val sweeps = SWEEP_PROBES.map { np =>
@@ -1435,7 +1431,7 @@ object Similarity {
           col("n_candidates"), col("n_hits"),
           expr("(1000 * n_hits) div (3 * n_queries)").as("recall_pm"))
     }
-    sweeps.reduce(_.union(_)).orderBy("nprobe").localCheckpoint()
+    Pin.cut(sweeps.reduce(_.union(_)).orderBy("nprobe"))
   }
 
   val s16Sql: String = {
@@ -1818,11 +1814,11 @@ object Similarity {
     * build is deterministic — hash seeds, 4dp + id ties — so memo vs
     * rebuild is bit-identical), and the build is the expensive half of
     * each query. Same discipline as s08CentsCache; the held DataFrame
-    * is localCheckpoint-pinned and evicted with its session. */
+    * is cut (Pin.cut) and evicted with its session. */
   private val knnGraphCache = Memo.artifact[DataFrame]("s20_knn_graph")
   private def fullKnnGraph(s: SparkSession, d: String,
       e: => DataFrame): DataFrame =
-    knnGraphCache(s, d)(s20KnnGraph(s, e).localCheckpoint())
+    knnGraphCache(s, d)(Pin.cut(s20KnnGraph(s, e)))
 
   /** test-only: the built graph with full lineage (no checkpoints). */
   private[graft] def s20GraphForTest(s: SparkSession, d: String): DataFrame =
@@ -1833,7 +1829,7 @@ object Similarity {
   def s20(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     // OFFLINE BUILD = NN-DESCENT (Dong et al. 2011), not all-pairs:
     // seed each node with 8 hash-derived pseudo-random neighbors
     // (vec_ids are 0..N-1 contiguous; offset j for a node =
@@ -1866,7 +1862,7 @@ object Similarity {
       .select(col("query_id"), col("nbr").as("cand"))
     val cands = seed.union(hop1).union(hop2)
       .filter(col("query_id") =!= col("cand")).distinct()
-      .localCheckpoint()
+      .transform(Pin.cut)
     val wR = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand"))
     val served = cands
       .join(e.select(col("vec_id").as("cand"), col("v").as("vb")), "cand")
@@ -2142,7 +2138,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cents = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val assigned = nearestCell(e, cents).localCheckpoint()
+    val assigned = Pin.cut(nearestCell(e, cents))
     // ingest: one base + two appended segments, cell-assigned at write
     Seq(col("vec_id") % 5 =!= 4, col("vec_id") % 10 === 4,
         col("vec_id") % 10 === 9).zipWithIndex.foreach { case (rule, i) =>
@@ -2172,8 +2168,8 @@ object Similarity {
         .filter(col("rank") <= 3)
         .select("query_id", "cell", "rank", "nn_id", "cos")
     }
-    val before = serve(multiView).localCheckpoint()
-    val after = serve(compacted).localCheckpoint()
+    val before = Pin.cut(serve(multiView))
+    val after = Pin.cut(serve(compacted))
     val equal = after.exceptAll(before).isEmpty &&
       before.exceptAll(after).isEmpty
     val nDropped = assigned.filter(col("vec_id") % 13 === 0).count()
@@ -2240,13 +2236,13 @@ object Similarity {
   def s23(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val n = e.count()
     val cut = n * 9 / 10
     val base = e.filter(col("vec_id") < cut)
     val arr = e.filter(col("vec_id") >= cut)
     val g = graft.api.Ann.knnGraph(base, "vec_id", "v", degree = 8,
-      rounds = 2).localCheckpoint()
+      rounds = 2).transform(Pin.cut)
     nswInsert(e, base, arr, g)
   }
 
@@ -2281,7 +2277,7 @@ object Similarity {
       .withColumn("rank", row_number().over(wA)).filter(col("rank") <= 8)
       .select(col("qid").as("node"), col("rank"), col("cand").as("nbr"),
         col("cos"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val rev = arrEdges.select(col("nbr").as("node"), col("node").as("cand"))
     val affected = rev.select("node").distinct()
     val pool = g.join(affected, "node")
@@ -2385,13 +2381,13 @@ object Similarity {
       flatGraph: Option[DataFrame] = None,
       l1Graph: Option[DataFrame] = None,
       compareFlat: Boolean = true): DataFrame = {
-    val e = e0.select(col("vec_id"), col("v")).localCheckpoint()
+    val e = Pin.cut(e0.select(col("vec_id"), col("v")))
     val flat = flatGraph.getOrElse(
       graft.api.Ann.knnGraph(e, "vec_id", "v", degree = 8,
-        rounds = 2).localCheckpoint())
+        rounds = 2).transform(Pin.cut))
     val probes = e.filter(col("vec_id") < probeMax)
       .select(col("vec_id").as("query_id"), col("v").as("va"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     def scored(cands: DataFrame): DataFrame = cands
       .join(e.select(col("vec_id").as("cand"), col("v").as("vb")), "cand")
       .join(probes, "query_id")
@@ -2426,7 +2422,7 @@ object Similarity {
         .filter(col("rank") <= 5)
         .select("query_id", "rank", "cand", "cos")
     }
-    val hier = serve(topN(visited, 3)).localCheckpoint()
+    val hier = Pin.cut(serve(topN(visited, 3)))
     if (!compareFlat)
       return hier.join(visitedN, "query_id")
         .select(col("query_id"), col("rank"), col("cand").as("nn_id"),
@@ -2436,7 +2432,7 @@ object Similarity {
     val flatSeed = topN(
       scored(l1.select(col("vec_id").as("cand"))
         .crossJoin(probes.select("query_id"))), 3)
-    val flatServe = serve(flatSeed).localCheckpoint()
+    val flatServe = Pin.cut(serve(flatSeed))
     // both serves always emit exactly 5 ranks per query, so the
     // (query_id, rank) join is total; any nn disagreement counts
     val mism = hier.select(col("query_id"), col("rank"), col("cand").as("h"))

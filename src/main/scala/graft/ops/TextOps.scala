@@ -1960,7 +1960,7 @@ object TextOps {
   // floats in the contract. Scale: pair generation is MAP-SIDE from
   // each doc's token array (nested transform+flatten — never a
   // positions self-join, which would shuffle the exploded corpus);
-  // ONE keyed shuffle to the (a,b) cell table, localCheckpoint-pinned
+  // ONE keyed shuffle to the (a,b) cell table, cut (Pin.cut)
   // so marginals/total don't re-scan the corpus (the r5-verdict
   // shared-artifact rule); marginals are vocab-sized dims, broadcast.
   def t38(s: SparkSession, d: String): DataFrame = {
@@ -1975,7 +1975,7 @@ object TextOps {
       .select(col("pr.a").as("a"), col("pr.b").as("b"), col("pr.k").as("k"))
       .groupBy("a", "b")
       .agg(count(lit(1)).as("n_ab"), sum(expr("1000 div k")).as("prox_milli"))
-      .localCheckpoint()
+      .transform(Pin.cut)
     val tot = cells.agg(sum("n_ab").as("t"))
     val ma = cells.groupBy("a").agg(sum("n_ab").as("n_a"))
     val mb = cells.groupBy("b").agg(sum("n_ab").as("n_b"))
@@ -2036,7 +2036,7 @@ object TextOps {
   // IEEE chain per (bigram, λ) rounded 6dp, summed as DECIMAL (t14
   // discipline). Scale: bigrams map-side per doc; ONE keyed shuffle
   // each for train cells / train unigrams / held-out cells
-  // (localCheckpoint-pinned, reused across all three λ); the λ sweep
+  // (Pin.cut, reused across all three λ); the λ sweep
   // multiplies a CELL table, never the corpus.
   def t39(s: SparkSession, d: String): DataFrame = {
     val toksAll = Tables.documents(s, d)
@@ -2049,16 +2049,16 @@ object TextOps {
             element_at(col("t"), i + 2).as("w")))).as("bg"))
       .select(col("held"), col("bg.v").as("v"), col("bg.w").as("w"))
     val trainBg = bigrams.filter(!col("held"))
-      .groupBy("v", "w").agg(count(lit(1)).as("c_vw")).localCheckpoint()
+      .groupBy("v", "w").agg(count(lit(1)).as("c_vw")).transform(Pin.cut)
     val trainV = trainBg.groupBy("v").agg(sum("c_vw").as("c_v"))
     // unigram table over ALL train tokens (not just bigram lefts)
     val trainUni = toksAll.filter(!col("held"))
       .select(explode(col("t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c_w")).localCheckpoint()
+      .groupBy("w").agg(count(lit(1)).as("c_w")).transform(Pin.cut)
     val stats = trainUni.agg(sum("c_w").as("tt"),
       count(lit(1)).as("vv"))
     val heldBg = bigrams.filter(col("held"))
-      .groupBy("v", "w").agg(count(lit(1)).as("n")).localCheckpoint()
+      .groupBy("v", "w").agg(count(lit(1)).as("n")).transform(Pin.cut)
     val lams = Seq(25, 50, 75).map(lit(_)).toArray
     val cells = heldBg
       .join(trainBg, Seq("v", "w"), "left")

@@ -1017,7 +1017,9 @@ class OpsSpec extends SparkSpec {
     val edges = ops.Dedup.d03(spark, sf)
     val ccLocal = ops.Dedup.connectedComponents(edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val i27Local = ops.IoOps.i27(spark, sf).collect().map(_.toString)
     val dir = java.nio.file.Files.createTempDirectory("graft_relck_").toString
+    val i27Dir = java.nio.file.Files.createTempDirectory("graft_relck_i27_").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       // same call sites, reliable RDD checkpoints to `dir` — the
@@ -1030,11 +1032,21 @@ class OpsSpec extends SparkSpec {
       // and checkpoints actually landed in the reliable dir
       val wrote = new java.io.File(dir).listFiles()
       assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")
+      // a single-pass cut site (i27's 3-row rollup over a directory its
+      // finally deletes) follows the same policy: identical rows, and a
+      // fresh dir gains checkpoint partition files from that call alone
+      spark.conf.set("spark.graft.checkpointDir", i27Dir)
+      val i27Reliable = ops.IoOps.i27(spark, sf).collect().map(_.toString)
+      assert(i27Reliable.sameElements(i27Local), "i27 rows diverged")
+      val i27Parts = java.nio.file.Files.walk(java.nio.file.Paths.get(i27Dir))
+        .filter(_.getFileName.toString.startsWith("part-")).count()
+      assert(i27Parts > 0, "i27's cut wrote no reliable checkpoint")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      fs.delete(new org.apache.hadoop.fs.Path(i27Dir), true)
     }
   }
 

@@ -344,4 +344,15 @@ class PlanSpec extends SparkSpec {
       s"struct siblings not pruned: $rs")
     assert(!rs.contains("v:"), s"array-struct sibling v not pruned: $rs")
   }
+
+  test("PlanDump's canonical form hides run-scoped ids, not plan moves") {
+    import org.apache.spark.sql.functions.col
+    def dump(df: DataFrame) = PlanDump.canonical(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    def q(n: Long) = spark.range(0, n, 1, 4).toDF("id").groupBy(col("id") % 3).count()
+    // a fresh frame gets fresh expression and plan ids; same shape, same text
+    val (a, b) = (dump(q(10)), dump(q(10)))
+    assert(a.contains("#1") && a == b, s"$a\n---\n$b")
+    assert(dump(q(10).filter(col("count") > 1)) != a)
+  }
 }
