@@ -41,13 +41,17 @@ object PlanDump {
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     catch { case e: Throwable => s"(plan dump failed: ${e.getMessage})\n" }
 
-  /** Run-scoped numbers, each renumbered per plan in order of first
+  /** Run-scoped names, each renumbered per plan in order of first
     * appearance: expression ids (`#n`), exchange `plan_id`s, RDD ids,
-    * whole-stage-codegen ids and the random suffix of a temp dir. All
-    * are session counters, so without this the same plan prints
-    * differently depending on what ran before it. */
+    * whole-stage-codegen and AQE query-stage ids, the random suffix of
+    * a temp dir, written files' UUIDs and lambda class/instance ids.
+    * All come from session or JVM counters, so without this the same
+    * plan prints differently depending on what ran before it. */
   private val runScoped = Seq("(#)(\\d+)", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)",
-    "(codegen id : )(\\d+)", "(/graft_[A-Za-z0-9]+_)(\\d{6,})").map(_.r)
+    "(codegen id : )(\\d+)", "(QueryStage\\nOutput [^\\n]*\\nArguments: )(\\d+)",
+    "(/graft_[A-Za-z0-9]+_)(\\d{6,})",
+    "()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})",
+    "(\\$\\$Lambda\\$?)([0-9]+/0x[0-9a-f]+@[0-9a-f]+)").map(_.r)
 
   private[graft] def canonical(plan: String): String =
     runScoped.foldLeft(plan) { (p, re) =>
@@ -84,8 +88,6 @@ object PlanDump {
     sb ++= "- Keys whose construction executes eagerly (streaming harnesses,\n"
     sb ++= "  Pin.cut sites) show the plan of their materialized RESULT;\n"
     sb ++= "  their upstream plans are pinned in specs.\n"
-    sb ++= "- Expression, plan, RDD and codegen ids and temp-dir suffixes are\n"
-    sb ++= "  renumbered per plan in order of first appearance.\n"
     plans.foreach { case (name, p) =>
       sb ++= s"\n## $name\n\n```\n"
       sb ++= p

@@ -13,10 +13,9 @@ import scala.collection.concurrent.TrieMap
   *   r05Cache(s, d) { build }               // one entry per (app, d)
   *   modelCache(s, d, s"it$iters") { fit }  // one per (app, d, sub-key)
   * }}}
-  * The build runs once per (applicationId, dataset, sub-key). A
-  * frame's build materializes itself eagerly through [[Pin]]:
-  * `Pin.share` for a frame several consumers read (persisted, lineage
-  * kept), `Pin.cut` for one whose lineage must not be replayed.
+  * The build runs once per (applicationId, dataset, sub-key); a
+  * frame's build ends in [[Pin]]`.share` (several consumers, lineage
+  * kept) or `Pin.cut` (lineage cut).
   *
   * Eviction has one rule: every lookup drops the entries of every
   * OTHER applicationId from every declared artifact. Spark allows one

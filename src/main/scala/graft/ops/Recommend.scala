@@ -204,10 +204,8 @@ object Recommend {
     * join, serve crossJoin — 3× per key), and the serve's per-pair
     * `transform(features, CAST double)` re-allocated the cast array
     * once per CANDIDATE instead of once per factor row. One shared
-    * (id, f: array<double>) frame per side, memoized for the family
-    * exactly like the model itself. Shared, not cut: a cut compacts
-    * the small panel to one partition, and each fold-in's per-row
-    * work then ran in one task (r51 took 1.8× as long). */
+    * frame per side, memoized like the model; not cut, which would
+    * compact it to one partition and run each fold-in in one task. */
   private val factorsCache = Memo.artifact[DataFrame]("als_factor_panel")
 
   private def factorPanel(s: SparkSession, d: String, side: String): DataFrame =
