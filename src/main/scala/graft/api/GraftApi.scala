@@ -13,9 +13,11 @@ import graft.ops.Pin
   * the test corpus, which pins its column names and constants; these
   * kernels are the same computations lifted to `(DataFrame, column
   * names, parameters)` so a user can run them on their OWN frames
-  * without touching the test schema. The gated dNN/sNN keys call
-  * straight into this package, so the oracle gate doubles as the
-  * kernel's correctness proof.
+  * without touching the test schema. Most gated keys call a kernel
+  * here (as `api.Obj.name`), so the oracle gate doubles as that
+  * kernel's correctness proof. The public kernels no gated key runs
+  * are listed with their reasons in ApiCoverageSpec, which fails on a
+  * new public kernel that has neither a gated caller nor a reason.
   *
   * As-of joins are already schema-parameterized at
   * [[graft.plans.AsOf.join]] (custom sort-merge SparkPlan; backward /
@@ -710,6 +712,20 @@ object Events {
       .drop("__us", "__gap", "__new")
   }
 
+  /** Per key, the first `ts` of each step as column `<step>_ts` (step
+    * names sanitized to [A-Za-z0-9_]): the one keyed agg both funnel
+    * kernels read. Returns the agg and its step columns in order. */
+  private def firstStepTimes(df: DataFrame, key: String, ts: String,
+      event: String, steps: Seq[String]): (DataFrame, Seq[String]) = {
+    require(steps.size >= 2, "a funnel needs at least 2 steps")
+    require(steps.distinct.size == steps.size, "funnel steps must be unique")
+    val names = steps.map(_.replaceAll("[^A-Za-z0-9_]", "_") + "_ts")
+    val firsts = steps.zip(names).map { case (st, n) =>
+      min(when(col(event) === st, col(ts).cast("timestamp"))).as(n)
+    }
+    (df.groupBy(col(key)).agg(firsts.head, firsts.tail: _*), names)
+  }
+
   /** Ordered-funnel completions (the e03-gated rule lifted to any
     * step sequence): per key, the FIRST occurrence of each step must
     * be strictly ordered — a user who clicked before ever viewing did
@@ -718,17 +734,10 @@ object Events {
     * [A-Za-z0-9_]). One keyed agg over one scan, no self-joins. */
   def funnel(df: DataFrame, key: String, ts: String, event: String,
       steps: Seq[String]): DataFrame = {
-    require(steps.size >= 2, "a funnel needs at least 2 steps")
-    require(steps.distinct.size == steps.size, "funnel steps must be unique")
-    def colName(s: String) = s.replaceAll("[^A-Za-z0-9_]", "_") + "_ts"
-    val firsts = steps.map(st =>
-      min(when(col(event) === st, col(ts).cast("timestamp")))
-        .as(colName(st)))
-    val agg = df.groupBy(col(key)).agg(firsts.head, firsts.tail: _*)
-    val ordered = steps.sliding(2).map { case Seq(a, b) =>
-      col(colName(a)) < col(colName(b))
-    }.reduce(_ && _)
-    agg.filter(ordered)
+    val (agg, names) = firstStepTimes(df, key, ts, event, steps)
+    agg.filter(names.sliding(2).map { case Seq(a, b) =>
+      col(a) < col(b)
+    }.reduce(_ && _))
   }
 
   /** Per-step funnel survivor counts: row k = keys whose first
@@ -738,21 +747,14 @@ object Events {
     * n_keys), monotone non-increasing in step_no. */
   def funnelCounts(df: DataFrame, key: String, ts: String, event: String,
       steps: Seq[String]): DataFrame = {
-    require(steps.size >= 2, "a funnel needs at least 2 steps")
-    require(steps.distinct.size == steps.size, "funnel steps must be unique")
-    def colName(s: String) = s.replaceAll("[^A-Za-z0-9_]", "_") + "_ts"
-    val firsts = steps.map(st =>
-      min(when(col(event) === st, col(ts).cast("timestamp")))
-        .as(colName(st)))
-    val agg = df.groupBy(col(key)).agg(firsts.head, firsts.tail: _*)
-      .transform(Pin.cut) // one agg feeds |steps| prefix counts
+    val (agg0, names) = firstStepTimes(df, key, ts, event, steps)
+    val agg = agg0.transform(Pin.cut) // one agg feeds |steps| prefix counts
     val spark = df.sparkSession
     import spark.implicits._
     val counts = steps.indices.map { k =>
-      val prefixOk = (0 to k).map(i => col(colName(steps(i))).isNotNull)
+      val prefixOk = (0 to k).map(i => col(names(i)).isNotNull)
         .reduce(_ && _) && (if (k == 0) lit(true)
-        else (1 to k).map(i =>
-          col(colName(steps(i - 1))) < col(colName(steps(i))))
+        else (1 to k).map(i => col(names(i - 1)) < col(names(i)))
           .reduce(_ && _))
       (k + 1, steps(k), agg.filter(prefixOk).count())
     }
@@ -799,17 +801,17 @@ object TopK {
 /** Corpus-curation funnel on any (id, text) frame. */
 object Curation {
 
-  /** The p01-shaped pipeline: quality bar → exact dedup (keep-lowest
-    * per fingerprint) → near-dup drop (LSH + Jaccard, keep the lower
-    * id of each verified pair), all computed as FLAGS over one corpus
-    * scan plus the candidate-bounded verify join. Returns the
-    * surviving (id, text) rows; use [[funnelCounts]] for the
-    * per-stage report. */
-  /** The shared funnel stages — one body so [[funnelSurvivors]] and
-    * [[funnelCounts]] can never desynchronize (ApiSpec cross-asserts
-    * their numbers). Returns (quality survivors, exact-dedup
-    * survivors, final survivors); `pin` cuts (Pin.cut) the stages
-    * that get counted AND consumed downstream. */
+  /** The p01-shaped pipeline without p01's language stage and
+    * per-language cap: quality bar (≥ minTokens tokens, stopword
+    * ratio ≤ maxStopRatio) → exact dedup (keep the lowest id per
+    * fingerprint, a join on the fingerprint groups' survivors) →
+    * near-dup drop (LSH + Jaccard over the exact survivors, anti-join
+    * the higher id of each verified pair). One body so
+    * [[funnelSurvivors]] and [[funnelCounts]] can never desynchronize
+    * (ApiSpec cross-asserts their numbers). Returns (quality
+    * survivors, exact-dedup survivors, final survivors); with `pin`
+    * the first two stages are cut (Pin.cut), since the counts read
+    * them and the later stages consume them. */
   private def funnelStages(df: DataFrame, id: String, text: String,
       minTokens: Int, maxStopRatio: Double, stopwords: Seq[String],
       jaccardThreshold: Double,
@@ -833,6 +835,8 @@ object Curation {
     (q, exact, exact.join(drops, Seq(id), "left_anti"))
   }
 
+  /** The surviving (id, text) rows of the [[funnelStages]] pipeline;
+    * [[funnelCounts]] gives the per-stage report. */
   def funnelSurvivors(df: DataFrame, id: String, text: String,
       minTokens: Int = 10, maxStopRatio: Double = 0.5,
       stopwords: Seq[String] = Nil,
@@ -857,7 +861,8 @@ object Curation {
 }
 
 /** Training-data mixture kernels on any (id, domain[, tokens]) frame —
-  * the schema-parameterized forms of the gated p03/p04/p09 mixers.
+  * the gated p03/p04/p09 (and p16) mixers run these; p10 keeps its
+  * two fixed rounds beside the fixpoint [[Mix.waterFill]].
   * All selection math is exact integer arithmetic: targets are floor
   * divisions of corpus totals, pick order is the deterministic hash
   * of (seed, id), and a run is reproducible on any cluster layout. */
@@ -869,48 +874,67 @@ object Mix {
       acc.when(col(domain) === dom, p)
     }.otherwise(defaultPct)
 
+  /** Every percentage a Mix kernel takes lies in [0, 100]: a negative
+    * entry would silently take nothing, one above 100 would over-give. */
+  private def checkPcts(pctByDomain: Map[String, Int], defaultPct: Int,
+      budgetPct: Int = 100): Unit = {
+    require(pctByDomain.values.forall(p => p >= 0 && p <= 100),
+      s"pctByDomain entries must be in [0, 100]: $pctByDomain")
+    require(defaultPct >= 0 && defaultPct <= 100,
+      s"defaultPct=$defaultPct out of [0, 100]")
+    require(budgetPct >= 0 && budgetPct <= 100,
+      s"budgetPct=$budgetPct out of [0, 100]")
+  }
+
+  /** hash56("<seed>#<id>"): the deterministic pick order. */
+  private def pickKey(seed: String, id: String): Column =
+    Hashing.hash56(concat_ws("#", lit(seed), col(id).cast("string")))
+
   /** Document-count mixture (the p03 kernel): per domain, take the
     * first `tot·pct div 100` rows under hash-of-id pick order. Returns
-    * the input rows + (pct, n_target, taken) so callers filter or
-    * audit; one domain-keyed shuffle plus a broadcast total.
-    * Percentages need not sum to 100 — each domain's target is
-    * independent (over-asked domains saturate at their size). */
+    * the input rows + (pct, n_target, pick_key, taken) so callers
+    * filter or audit; `pick_key` is the row's hash56("<seed>#<id>")
+    * rank key (p03 sums it over taken rows as an id-set checksum). One
+    * domain-keyed shuffle plus a broadcast total. Percentages need
+    * not sum to 100 — each domain's target is independent (over-asked
+    * domains saturate at their size). */
   def byDocCount(df: DataFrame, id: String, domain: String,
       pctByDomain: Map[String, Int], defaultPct: Int = 0,
       seed: String = "mix"): DataFrame = {
+    checkPcts(pctByDomain, defaultPct)
     val tot = df.agg(count(lit(1)).as("__tot"))
     val w = Window.partitionBy(domain)
-      .orderBy(col("__hkey"), col(id))
+      .orderBy(col("pick_key"), col(id))
     df.crossJoin(broadcast(tot))
       .withColumn("pct", pctCol(domain, pctByDomain, defaultPct))
       .withColumn("n_target", expr("cast((cast(__tot as decimal(38,0)) * pct) div 100 as bigint)"))
-      .withColumn("__hkey",
-        Hashing.hash56(concat_ws("#", lit(seed), col(id).cast("string"))))
+      .withColumn("pick_key", pickKey(seed, id))
       .withColumn("taken", row_number().over(w) <= col("n_target"))
-      .drop("__tot", "__hkey")
+      .drop("__tot")
   }
 
-  /** Token-budget mixture (the p04 kernel): a training mix is
+  /** Token-budget mixture (the p04/p16 kernel): a training mix is
     * specified in TOKENS, so each domain's budget is
     * `tot_tokens·pct div 100` and a row is taken iff its whole-prefix
     * cumulative token count fits the budget under hash pick order —
     * the deterministic prefix rule, no fractional documents. Returns
-    * input rows + (pct, budget, cum_tokens, taken). */
+    * input rows + (pct, budget, pick_key, cum_tokens, taken), with
+    * `pick_key` as in [[byDocCount]]. */
   def byTokenBudget(df: DataFrame, id: String, domain: String,
       tokens: String, pctByDomain: Map[String, Int], defaultPct: Int = 0,
       seed: String = "tokmix"): DataFrame = {
+    checkPcts(pctByDomain, defaultPct)
     val tot = df.agg(sum(col(tokens).cast("long")).as("__tot_tok"))
     val w = Window.partitionBy(domain)
-      .orderBy(col("__hkey"), col(id))
+      .orderBy(col("pick_key"), col(id))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.crossJoin(broadcast(tot))
       .withColumn("pct", pctCol(domain, pctByDomain, defaultPct))
       .withColumn("budget", expr("cast((cast(__tot_tok as decimal(38,0)) * pct) div 100 as bigint)"))
-      .withColumn("__hkey",
-        Hashing.hash56(concat_ws("#", lit(seed), col(id).cast("string"))))
+      .withColumn("pick_key", pickKey(seed, id))
       .withColumn("cum_tokens", sum(col(tokens).cast("long")).over(w))
       .withColumn("taken", col("cum_tokens") <= col("budget"))
-      .drop("__tot_tok", "__hkey")
+      .drop("__tot_tok")
   }
 
   /** Temperature-scaled domain weights (the p09 kernel, the
@@ -974,14 +998,9 @@ object Mix {
     // the ask is over 100 is only knowable per-run (defaultPct covers
     // however many domains the data contains, and a reusable config
     // map may carry entries for domains absent from this frame — a
-    // static sum check would reject those valid calls). The requires
-    // catch the statically-checkable misuse: out-of-range entries.
-    require(pctByDomain.values.forall(p => p >= 0 && p <= 100),
-      s"pctByDomain entries must be in [0, 100]: $pctByDomain")
-    require(defaultPct >= 0 && defaultPct <= 100,
-      s"defaultPct=$defaultPct out of [0, 100]")
-    require(budgetPct >= 0 && budgetPct <= 100,
-      s"budgetPct=$budgetPct out of [0, 100]")
+    // static sum check would reject those valid calls). checkPcts
+    // catches the statically-checkable misuse: out-of-range entries.
+    checkPcts(pctByDomain, defaultPct, budgetPct)
     val dom = df.groupBy(domain)
       .agg(sum(col(tokens).cast("long")).as("supply"))
       .transform(Pin.cut)
@@ -1139,7 +1158,7 @@ object Eval {
 }
 
 /** BM25 ranking on any (id, text) frame for a caller-supplied query —
-  * the schema-parameterized form of the gated t36 kernel. */
+  * the gated t36 key runs it on its data-derived query. */
 object Search {
 
   /** Okapi BM25 over the engine tokenizer: idf = ln((N−df+0.5)/

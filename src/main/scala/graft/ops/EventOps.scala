@@ -67,20 +67,13 @@ object EventOps {
       |FROM per_session GROUP BY 1 ORDER BY user_id""".stripMargin
 
   // e03: ordered funnel — users whose first view < first click < first
-  // purchase. One agg with conditional mins; no joins.
+  // purchase (api.Events.funnel: one agg with conditional mins, no joins).
   def e03(s: SparkSession, d: String): DataFrame =
-    Tables.events(s, d)
-      .groupBy("user_id")
-      .agg(
-        min(when(col("event_type") === "view", col("ts"))).as("first_view"),
-        min(when(col("event_type") === "click", col("ts"))).as("first_click"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("first_purchase"))
-      .filter(col("first_view") < col("first_click") &&
-        col("first_click") < col("first_purchase"))
-      .select(col("user_id"),
-        unix_micros(col("first_view")).as("view_us"),
-        unix_micros(col("first_click")).as("click_us"),
-        unix_micros(col("first_purchase")).as("purchase_us"))
+    graft.api.Events.funnel(Tables.events(s, d), "user_id", "ts", "event_type",
+        Seq("view", "click", "purchase"))
+      .select(col("user_id"), unix_micros(col("view_ts")).as("view_us"),
+        unix_micros(col("click_ts")).as("click_us"),
+        unix_micros(col("purchase_ts")).as("purchase_us"))
       .orderBy("user_id")
 
   val e03Sql: String =
@@ -95,18 +88,9 @@ object EventOps {
       |WHERE first_view < first_click AND first_click < first_purchase
       |ORDER BY user_id""".stripMargin
 
-  // e04: next-day retention per activity date.
-  def e04(s: SparkSession, d: String): DataFrame = {
-    val days = Tables.events(s, d)
-      .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-    val next = days.select(col("user_id").as("u2"), col("day").as("day2"))
-    days.join(next, col("u2") === col("user_id") &&
-        col("day2") === date_add(col("day"), 1), "left")
-      .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
-      .agg(countDistinct(col("user_id")).as("active"),
-        countDistinct(when(col("u2").isNotNull, col("user_id"))).as("retained"))
-      .orderBy("day")
-  }
+  // e04: next-day retention per activity date (api.Events.retention).
+  def e04(s: SparkSession, d: String): DataFrame =
+    graft.api.Events.retention(Tables.events(s, d), "user_id", "ts", 1)
 
   val e04Sql: String =
     """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)

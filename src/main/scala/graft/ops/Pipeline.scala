@@ -225,6 +225,19 @@ object Pipeline {
       |SELECT lang, count(*) AS n_kept, CAST(sum(doc_id) AS BIGINT) AS sum_ids
       |FROM keep GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** The mixers' 4-domain rollup: the source's numeric suffix mod 4. */
+  private def domain4: Column = concat(lit("dom"),
+    (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
+    .as("domain")
+
+  /** The p03/p04/p16 target mix; every other domain takes 5%. */
+  private val mixPcts = Map("dom0" -> 50, "dom1" -> 25, "dom2" -> 20)
+
+  /** Order-independent DECIMAL sum of the taken rows' `pick_key`s. */
+  private def takenChecksum: Column =
+    sum(when(col("taken"), col("pick_key")).otherwise(lit(0L))
+      .cast("decimal(38,0)")).cast("string").as("ids_checksum")
+
   // ------------------------------------------------------------------
   // p03: DOMAIN-MIXTURE sampling — the step that turns a curated lake
   // into a training mix: every corpus ships with target domain
@@ -238,35 +251,19 @@ object Pipeline {
   // (take-all, n_taken < n_target) is exercised — the mixer a real
   // pipeline needs when a domain runs dry. The checksum is an
   // order-independent DECIMAL sum over the chosen ids' hash keys, so
-  // the gate pins the exact chosen SET, not just its size.
+  // the gate pins the exact chosen SET, not just its size. The pick
+  // is api.Mix.byDocCount; this key adds the per-domain rollup.
   // Scale: one window shuffle keyed by domain (WindowGroupLimit
   // pushes the rank filter below the sort at 100 TB), one 1-row
   // broadcast total; no per-doc driver state.
-  def p03(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"))
-    val tot = docs.agg(count(lit(1)).as("tot"))
-    val pct = when(col("domain") === "dom0", 50)
-      .when(col("domain") === "dom1", 25)
-      .when(col("domain") === "dom2", 20)
-      .otherwise(5)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("domain").orderBy(col("hkey"), col("doc_id"))
-    docs.crossJoin(broadcast(tot))
-      .withColumn("pct", pct)
-      .withColumn("n_target", expr("(tot * pct) div 100"))
-      .withColumn("hkey",
-        Hashing.hash56(concat_ws("#", lit("mix"), col("doc_id"))))
-      .withColumn("rn", row_number().over(w))
+  def p03(s: SparkSession, d: String): DataFrame =
+    graft.api.Mix.byDocCount(
+        Tables.documents(s, d).select(col("doc_id"), domain4),
+        "doc_id", "domain", mixPcts, defaultPct = 5)
       .groupBy("domain", "pct", "n_target")
       .agg(count(lit(1)).as("n_docs"),
-        count(when(col("rn") <= col("n_target"), lit(1))).as("n_taken"),
-        sum(when(col("rn") <= col("n_target"), col("hkey")).otherwise(lit(0L))
-          .cast("decimal(38,0)")).cast("string").as("ids_checksum"))
+        count(when(col("taken"), lit(1))).as("n_taken"), takenChecksum)
       .orderBy("domain")
-  }
 
   val p03Sql: String =
     s"""WITH doms AS (
@@ -297,41 +294,25 @@ object Pipeline {
   // iff its whole-prefix cumulative token count fits the budget (the
   // deterministic prefix rule — no fractional documents). dom0 is
   // over-asked (50% budget vs ~25% token share) so the take-all
-  // branch is real; the checksum pins the exact taken SET.
+  // branch is real; the checksum pins the exact taken SET. The pick
+  // is api.Mix.byTokenBudget; this key adds the per-domain rollup.
   // Scale: tokenization is map-side; ONE window shuffle keyed by
   // domain does the running sum (each domain's docs stream through
   // one partition's sort — at 100 TB the mixer would sub-bucket by
   // hash prefix and prefix-sum the bucket totals, same math); the
   // corpus token total is a 1-row broadcast.
-  def p04(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"),
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"),
-      size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
-    val tot = docs.agg(sum(col("n_tok")).as("tot_tok"))
-    val pct = when(col("domain") === "dom0", 50)
-      .when(col("domain") === "dom1", 25)
-      .when(col("domain") === "dom2", 20)
-      .otherwise(5)
-    val w = Window.partitionBy("domain").orderBy(col("hkey"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs.crossJoin(broadcast(tot))
-      .withColumn("pct", pct)
-      .withColumn("budget", expr("(tot_tok * pct) div 100"))
-      .withColumn("hkey",
-        Hashing.hash56(concat_ws("#", lit("tokmix"), col("doc_id"))))
-      .withColumn("cum_tok", sum(col("n_tok")).over(w))
-      .withColumn("taken", col("cum_tok") <= col("budget"))
+  def p04(s: SparkSession, d: String): DataFrame =
+    graft.api.Mix.byTokenBudget(
+        Tables.documents(s, d).select(col("doc_id"), domain4,
+          size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok")),
+        "doc_id", "domain", "n_tok", mixPcts, defaultPct = 5)
       .groupBy("domain", "pct", "budget")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("tok_total"),
         count(when(col("taken"), lit(1))).as("n_taken"),
         sum(when(col("taken"), col("n_tok")).otherwise(lit(0L))).as("tok_taken"),
-        sum(when(col("taken"), col("hkey")).otherwise(lit(0L))
-          .cast("decimal(38,0)")).cast("string").as("ids_checksum"))
+        takenChecksum)
       .orderBy("domain")
-  }
 
   val p04Sql: String =
     s"""WITH doms AS (
@@ -363,7 +344,8 @@ object Pipeline {
   // budgets in ⌈L/4⌉-free whitespace-token stand-ins, but a user
   // specifying a 15T-token mix means the units the TOKENIZER emits).
   // Same 4-domain rollup, same md5-hash pick order, same whole-prefix
-  // budget rule as p04 (which stays frozen as the stand-in twin) —
+  // budget rule as p04 (which stays frozen as the stand-in twin; both
+  // run api.Mix.byTokenBudget, this one under seed "bpemix") —
   // but every document's cost is its t40-trained BPE piece count:
   // tokens join the learned segmentation (vocab-dim broadcast, the
   // t41 discipline; un-merged past-cap terms fall back to character
@@ -376,38 +358,22 @@ object Pipeline {
   def p16(s: SparkSession, d: String): DataFrame = {
     val pm = TextOps.bpePieceCounts(s, d)
     val perDoc = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(lit("dom"),
-          (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-          .as("domain"),
+      .select(col("doc_id"), domain4,
         explode_outer(graft.functions.TextNorm.tokens(col("text"))).as("term"))
       .join(broadcast(pm), Seq("term"), "left")
       .groupBy("doc_id", "domain")
       .agg(sum(when(col("term").isNull, lit(0L))
         .otherwise(coalesce(col("n_pieces"), length(col("term")).cast("long"))))
         .as("n_tok"))
-    val tot = perDoc.agg(sum(col("n_tok")).as("tot_tok"))
-    val pct = when(col("domain") === "dom0", 50)
-      .when(col("domain") === "dom1", 25)
-      .when(col("domain") === "dom2", 20)
-      .otherwise(5)
-    val w = Window.partitionBy("domain").orderBy(col("hkey"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perDoc.crossJoin(broadcast(tot))
-      .withColumn("pct", pct)
-      .withColumn("budget", expr("(tot_tok * pct) div 100"))
-      .withColumn("hkey",
-        Hashing.hash56(concat_ws("#", lit("bpemix"), col("doc_id"))))
-      .withColumn("cum_tok", sum(col("n_tok")).over(w))
-      .withColumn("taken", col("cum_tok") <= col("budget"))
+    graft.api.Mix.byTokenBudget(perDoc, "doc_id", "domain", "n_tok",
+        mixPcts, defaultPct = 5, seed = "bpemix")
       .groupBy("domain", "pct", "budget")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("tok_total"),
         count(when(col("taken"), lit(1))).as("n_taken"),
         sum(when(col("taken"), col("n_tok")).otherwise(lit(0L))
           .cast("decimal(38,0)")).cast("long").as("tok_taken"),
-        sum(when(col("taken"), col("hkey")).otherwise(lit(0L))
-          .cast("decimal(38,0)")).cast("string").as("ids_checksum"))
+        takenChecksum)
       .orderBy("domain")
   }
 
@@ -774,35 +740,18 @@ object Pipeline {
   // t14 libm-absorbing discipline); normalization sums those exact
   // decimals and everything downstream is integer off w_ppm
   // (target_tok = tot·w_ppm div 10⁶). α<1 flattening (small domains
-  // boosted above share, big ones below) is pinned in OpsSpec.
+  // boosted above share, big ones below) is pinned in OpsSpec. The
+  // weights are api.Mix.temperature; this key renames its columns.
   // Scale: tokenization map-side, one 4-group agg; every later join
   // is a 1-row/4-row broadcast — no second corpus pass.
-  def p09(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"),
-      size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
-    // pin the 4-row rollup: tot/wsum re-derive from IT, not from two
-    // more corpus scans (the plan audit showed 3 parquet passes here)
-    val dom = docs.groupBy("domain")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
-      .transform(Pin.cut)
-    val tot = dom.agg(sum(col("n_tok")).as("tot_tok"))
-    val w = dom.crossJoin(broadcast(tot))
-      .withColumn("share_ppm", expr("(1000000 * n_tok) div tot_tok"))
-      .withColumn("w6",
-        round(pow(col("n_tok").cast("double") / col("tot_tok"), lit(0.3)), 6))
-    val ws = w.agg(sum(col("w6").cast("decimal(20,6)")).as("wsum"))
-    w.crossJoin(broadcast(ws))
-      .withColumn("w_ppm",
-        round(lit(1000000.0) * col("w6") / col("wsum").cast("double"), 0)
-          .cast("long"))
-      .select(col("domain"), col("n_docs"), col("n_tok"), col("share_ppm"),
-        col("w6"), col("w_ppm"),
-        expr("(tot_tok * w_ppm) div 1000000").as("target_tok"))
-      .orderBy("domain")
-  }
+  def p09(s: SparkSession, d: String): DataFrame =
+    graft.api.Mix.temperature(
+        Tables.documents(s, d).select(domain4,
+          size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok")),
+        "domain", "n_tok", tau = 0.3)
+      .select(col("domain"), col("n_rows").as("n_docs"),
+        col("n_tokens").as("n_tok"), col("share_ppm"), col("w6"), col("w_ppm"),
+        col("target_tokens").as("target_tok"))
 
   val p09Sql: String =
     """WITH docs AS (
@@ -842,10 +791,7 @@ object Pipeline {
   // 1-row-broadcast math — the allocation algebra never touches the
   // corpus again.
   def p10(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"),
+    val docs = Tables.documents(s, d).select(domain4,
       size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
     val dom = docs.groupBy("domain").agg(sum(col("n_tok")).as("supply"))
       .transform(Pin.cut)
@@ -997,10 +943,7 @@ object Pipeline {
   // (Pin.cut); the allocation algebra is 4-row ×
   // 1-row-broadcast math.
   def p12(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"),
+    val docs = Tables.documents(s, d).select(domain4,
       size(graft.functions.TextNorm.tokens(col("text"))).cast("long").as("n_tok"))
     val dom = docs.groupBy("domain").agg(sum(col("n_tok")).as("supply"))
       .transform(Pin.cut)
@@ -1096,10 +1039,7 @@ object Pipeline {
   // corpus totals and domain totals re-derive from IT, the r5-verdict
   // shared-artifact rule) → 4-row broadcast algebra.
   def p13(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(
-      concat(lit("dom"),
-        (substring(col("source"), 4, 10).cast("int") % 4).cast("string"))
-        .as("domain"),
+    val docs = Tables.documents(s, d).select(domain4,
       explode(graft.functions.TextNorm.tokens(col("text"))).as("w"))
     val cells = docs.groupBy("domain", "w").agg(count(lit(1)).as("c_dw"))
       .transform(Pin.cut)

@@ -1725,46 +1725,23 @@ object TextOps {
   // fixed-order IEEE expression — idf · tf·(k1+1) / (tf + k1·(1−b +
   // b·dl/avgdl)) — rounded 6dp once; the per-doc score is then an
   // exact, order-independent decimal sum (t14/t35 discipline).
-  // Scale: pass 1 (query derivation) is the vocab build — distinct
-  // (doc,term) explode → term-keyed df agg (a FIXED query list skips
-  // it); pass 2 explodes the corpus once, inner-joins the BROADCAST
-  // 5-term dim (map-side — non-matching tokens never shuffle), and
-  // aggregates (doc,term); dl rides the explode so no doc-length
-  // join. The df rank window is vocab-dim; top-10 is a TakeOrdered.
+  // Scale: the query derivation is the vocab build — distinct
+  // (doc,term) explode → term-keyed df agg → vocab-dim rank window —
+  // collected once at construction (a FIXED query list skips it; a
+  // corpus under 21 distinct terms has no query, which bm25 rejects).
+  // The scoring is api.Search.bm25: one tokenized cut of the corpus,
+  // each doc's tokens filtered to the 5 query terms map-side
+  // (non-matching tokens never shuffle), one (doc,term) agg with dl
+  // riding along. Top-10 is a TakeOrdered.
   def t36(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-      .select(col("doc_id"), tokens.as("toks"), size(tokens).as("dl"))
-    val corpus = docs.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val df = docs.select(col("doc_id"), explode(array_distinct(col("toks"))).as("term"))
+    val terms = docs.select(explode(array_distinct(tokens)).as("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
-    val qterms = df
       .withColumn("rn", row_number().over(
         Window.orderBy(col("df").desc, col("term"))))
       .filter(col("rn").between(21, 25))
-      .crossJoin(broadcast(corpus))
-      .withColumn("idf6",
-        round(log((col("n_docs") - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)), 6).cast("decimal(18,6)"))
-      .select(col("term"), col("idf6"), col("n_docs"), col("sum_dl"))
-    val tf = docs.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .join(broadcast(qterms), Seq("term"))
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"),
-        first(col("idf6")).as("idf6"),
-        first(col("n_docs")).as("n_docs"), first(col("sum_dl")).as("sum_dl"))
-    tf
-      .withColumn("avgdl",
-        col("sum_dl").cast("double") / col("n_docs").cast("double"))
-      .withColumn("contrib6",
-        round(col("idf6").cast("double") *
-          (col("tf").cast("double") * lit(2.2)) /
-          (col("tf").cast("double") +
-            lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / col("avgdl")))),
-          6).cast("decimal(18,6)"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hit"), sum(col("contrib6")).as("score6"))
-      .orderBy(col("score6").desc, col("doc_id"))
-      .limit(10)
+      .select("term").collect().map(_.getString(0)).toSeq
+    graft.api.Search.bm25(docs, "doc_id", "text", terms).limit(10)
   }
 
   val t36Sql: String = {

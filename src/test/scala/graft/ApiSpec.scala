@@ -244,6 +244,17 @@ class ApiSpec extends SparkSpec {
     assert(codeTaken == expect, s"pick order diverged: $codeTaken vs $expect")
   }
 
+  test("api.Mix.byDocCount and byTokenBudget reject pcts outside [0, 100]") {
+    val df = spark.createDataFrame(Seq((1L, "web", 10L))).toDF("rec_id", "corpus", "tok")
+    // a negative pct would silently take nothing; checked before any job
+    intercept[IllegalArgumentException](
+      api.Mix.byDocCount(df, "rec_id", "corpus", Map("web" -> -5)))
+    intercept[IllegalArgumentException](
+      api.Mix.byDocCount(df, "rec_id", "corpus", Map.empty, defaultPct = 101))
+    intercept[IllegalArgumentException](
+      api.Mix.byTokenBudget(df, "rec_id", "corpus", "tok", Map("web" -> 120)))
+  }
+
   test("api.Mix.byTokenBudget applies the whole-prefix rule exactly") {
     val rows = Seq((1L, "a", 100L), (2L, "a", 100L), (3L, "a", 100L),
       (4L, "b", 50L), (5L, "b", 50L))
